@@ -1,6 +1,6 @@
 """Block-max single-term top-k (the north star's "block-max-WAND-style
 scorer"): exact-result guarantee, bag-skip proof, and end-to-end rank
-identity through SegmentIndex.search on both index formats."""
+identity through SegmentIndex.search on both writers."""
 
 import numpy as np
 import pytest
@@ -8,6 +8,7 @@ import pytest
 from wiser_spark.config import BM25Params, IndexConfig
 from wiser_spark.functions.bm25 import tfnorm_cache
 from wiser_spark.operators.segments import (
+    DOCLEN_TERM,
     PACK_SIZE,
     SegmentIndex,
     _topk_blockmax_single,
@@ -20,11 +21,22 @@ K1 = PARAMS.k1
 IDF = 1.37  # arbitrary positive idf for the unit tests
 
 
+def _term_segments(postings):
+    """One shard's term rows (its doc-length sentinel, built from the
+    postings' tf sums, dropped)."""
+    from pyspark.sql import functions as F
+
+    doclens = postings.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
+    return build_segments(postings, 1, doclens).filter(
+        F.col("term") != DOCLEN_TERM
+    )
+
+
 def _mk_row(spark, tfs_by_doc):
     """One term, docIDs 0..n-1 with the given tfs -> one segment row."""
     rows = [("t", i, int(tf)) for i, tf in enumerate(tfs_by_doc)]
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    return build_segments(postings, n_shards=1).collect()[0].asDict()
+    return _term_segments(postings).collect()[0].asDict()
 
 
 def _full_topk(seg, k, cache, codes_for):
@@ -125,7 +137,7 @@ def test_blockmax_flat_tf_falls_back_to_full_decode(spark, cache):
 def test_blockmax_end_to_end_rank_identity(spark, tmp_path, monkeypatch,
                                             writer):
     """SegmentIndex.search on a hot single term returns the same rows
-    whether the block-max gate fires or not, on both index formats."""
+    whether the block-max gate fires or not, from both writers."""
     import wiser_spark.operators.segments as segmod
     from wiser_spark.operators.docstats import build_docstats, corpus_stats
     from wiser_spark.operators.mapside import write_index_mapside
@@ -168,7 +180,7 @@ def _mk_term_row(spark, term, doc_tfs):
     """One term over explicit (doc_id, tf) pairs -> one segment row."""
     rows = [(term, int(d), int(tf)) for d, tf in doc_tfs]
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    return build_segments(postings, n_shards=1).filter(
+    return _term_segments(postings).filter(
         f"term = '{term}'"
     ).collect()[0].asDict()
 
@@ -478,7 +490,7 @@ def _mk_pos_rows(spark, contents):
     docs = spark.createDataFrame(
         list(enumerate(contents)), "doc_id long, content string"
     )
-    segs = build_segments(build_postings(docs), n_shards=1).collect()
+    segs = _term_segments(build_postings(docs)).collect()
     out: dict = {}
     for r in segs:
         out.setdefault(r["term"], []).append(r.asDict())
@@ -582,7 +594,7 @@ def _mk_pos_rows_sub(spark, contents, lo, hi):
         "doc_id long, content string",
     )
     out: dict = {}
-    for r in build_segments(build_postings(docs), n_shards=1).collect():
+    for r in _term_segments(build_postings(docs)).collect():
         out.setdefault(r["term"], []).append(r.asDict())
     return out
 

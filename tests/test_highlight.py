@@ -46,9 +46,9 @@ def test_index_snippets_phrase_filters_offsets(spark, tmp_path):
 
 
 def test_snippets_fallback_without_offsets_column(spark, tmp_path):
-    """A v1 index (built from positions-only postings, empty off_blob)
-    must still serve snippets — via re-tokenization fallback, not a
-    decoder crash."""
+    """An index without offsets (written from positions-only postings,
+    empty off_blob) must still serve snippets — via re-tokenization
+    fallback, not a decoder crash."""
     from wiser_spark.config import BM25Params, IndexConfig
     from wiser_spark.operators.docstats import build_docstats, corpus_stats
     from wiser_spark.operators.postings import build_dictionary, build_postings
@@ -60,7 +60,7 @@ def test_snippets_fallback_without_offsets_column(spark, tmp_path):
          (2, "alpha beta alpha beta repeated pair text.")],
         "doc_id long, content string",
     )
-    d = str(tmp_path / "v1idx")
+    d = str(tmp_path / "nooffidx")
     postings = build_postings(docs)  # positions only, NO offsets
     docstats = build_docstats(docs)
     write_index(postings, docstats, build_dictionary(postings),

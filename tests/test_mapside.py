@@ -1,5 +1,6 @@
-"""Map-side (zero-shuffle) index build == oracle, and == the
-shuffle-based v1 path. This is the scale-path differential gate."""
+"""Map-side (zero-shuffle) index build == oracle, and its encoder ==
+the per-term reference encode of the shuffle-based path. This is the
+scale-path differential gate."""
 
 import json
 
@@ -7,8 +8,13 @@ import pytest
 
 from wiser_spark.config import BM25Params, IndexConfig
 from wiser_spark.operators.mapside import write_index_mapside
-from wiser_spark.operators.postings import assign_doc_ids
-from wiser_spark.operators.segments import SegmentIndex
+from wiser_spark.operators.docstats import build_docstats, corpus_stats
+from wiser_spark.operators.postings import (
+    assign_doc_ids,
+    build_dictionary,
+    build_postings,
+)
+from wiser_spark.operators.segments import SegmentIndex, write_index
 from wiser_spark.oracle import OracleEngine
 from wiser_spark.sources.corpus import corpus_df, make_corpus
 
@@ -45,36 +51,45 @@ def test_meta_and_dictionary(spark, mapside_dir, oracle):
     assert "" not in d  # sentinel rows excluded from the dictionary
 
 
+def _write_shuffled(docs, d, cfg):
+    """The shuffle-built writer (write_index) over the same docs."""
+    postings = build_postings(docs)
+    docstats = build_docstats(docs)
+    write_index(postings, docstats, build_dictionary(postings),
+                corpus_stats(docstats), d, cfg)
+
+
 def test_degenerate_corpora(spark, tmp_path):
     """Empty corpus, single doc, and a doc that tokenizes to nothing all
-    build readable, correctly-answering indexes."""
-    cfg = IndexConfig(bm25=PARAMS, n_shards=2)
-    d = str(tmp_path / "empty")
-    write_index_mapside(
-        spark.createDataFrame([], "doc_id long, content string"), d, cfg
-    )
-    i1 = SegmentIndex(spark, d)
-    assert i1.stats.n_docs == 0
-    assert i1.search(["anything"], k=5).count() == 0
-    assert i1.search_batch([(0, ["x"], False)], k=5).count() == 0
+    build readable, correctly-answering indexes — through BOTH writers
+    (the last case leaves a shard with a sentinel and no term rows)."""
+    schema = "doc_id long, content string"
+    for name, write in (("mapside", write_index_mapside),
+                        ("shuffled", _write_shuffled)):
+        cfg = IndexConfig(bm25=PARAMS, n_shards=2)
+        d = str(tmp_path / name / "empty")
+        write(spark.createDataFrame([], schema), d, cfg)
+        i1 = SegmentIndex(spark, d)
+        assert i1.stats.n_docs == 0
+        assert i1.search(["anything"], k=5).count() == 0
+        assert i1.search_batch([(0, ["x"], False)], k=5).count() == 0
 
-    d2 = str(tmp_path / "single")
-    write_index_mapside(
-        spark.createDataFrame([(0, "lone doc words")],
-                              "doc_id long, content string"), d2, cfg
-    )
-    i2 = SegmentIndex(spark, d2)
-    assert [r["doc_id"] for r in i2.search(["lone"], k=5).collect()] == [0]
-    assert i2.search(["lone", "doc"], k=5, is_phrase=True).count() == 1
+        d2 = str(tmp_path / name / "single")
+        write(spark.createDataFrame([(0, "lone doc words")], schema), d2, cfg)
+        i2 = SegmentIndex(spark, d2)
+        got = i2.search(["lone"], k=5).collect()
+        assert [r["doc_id"] for r in got] == [0], name
+        assert i2.search(["lone", "doc"], k=5, is_phrase=True).count() == 1
 
-    d3 = str(tmp_path / "notoken")
-    write_index_mapside(
-        spark.createDataFrame([(0, "!!! ??? ...")],
-                              "doc_id long, content string"), d3,
-        IndexConfig(bm25=PARAMS, n_shards=1),
-    )
-    i3 = SegmentIndex(spark, d3)
-    assert i3.stats.n_docs == 1 and i3.search(["x"], k=5).count() == 0
+        d3 = str(tmp_path / name / "notoken")
+        write(
+            spark.createDataFrame([(0, "!!! ??? ...")], schema), d3,
+            IndexConfig(bm25=PARAMS, n_shards=1),
+        )
+        i3 = SegmentIndex(spark, d3)
+        assert i3.stats.n_docs == 1 and i3.search(["x"], k=5).count() == 0
+        sent = spark.read.parquet(f"{d3}/segments").collect()
+        assert [r["term"] for r in sent] == [""], name
 
 
 def test_batched_encode_byte_identical_to_reference():

@@ -10,14 +10,14 @@ import pytest
 
 from wiser_spark.config import BM25Params, IndexConfig
 from wiser_spark.operators.segments import SegmentIndex
-from wiser_spark.plans.build import IndexBuildPipeline
+from wiser_spark.plans.build import IndexBuildPipeline, stage_dir
 from wiser_spark.sources.corpus import corpus_df
 
 PARAMS = BM25Params(1.2, 0.75)
 
 
 def _mtimes(work_dir, stage):
-    d = os.path.join(work_dir, stage)
+    d = stage_dir(work_dir, stage)
     return {
         f: os.path.getmtime(os.path.join(d, f))
         for f in os.listdir(d)
@@ -48,6 +48,14 @@ def test_manifest_written(work_dir):
     with open(os.path.join(work_dir, "manifest.json")) as f:
         m = json.load(f)
     assert set(m) == {"docs", "postings", "docstats", "dictionary", "segments"}
+    # the index dir holds only what readers open; the build checkpoints
+    # sit apart under _stages/
+    assert set(os.listdir(work_dir)) == {
+        "dictionary", "segments", "stats.json", "manifest.json", "_stages"
+    }
+    assert set(os.listdir(os.path.join(work_dir, "_stages"))) == {
+        "docs", "postings", "docstats"
+    }
     for stage, e in m.items():
         assert e["status"] == "complete"
         assert e["rows"] > 0 and e["bytes"] > 0

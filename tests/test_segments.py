@@ -13,8 +13,10 @@ from wiser_spark.operators.postings import (
     build_postings,
 )
 from wiser_spark.operators.segments import (
+    DOCLEN_TERM,
     SegmentIndex,
     build_segments,
+    decode_doclen_sentinel,
     decode_segment_row,
     write_index,
 )
@@ -23,6 +25,17 @@ from wiser_spark.sources.corpus import corpus_df, make_corpus
 
 N_DOCS = 150
 PARAMS = BM25Params(1.2, 0.75)
+
+
+def _term_row(postings):
+    """The segment row of a one-term postings table (one shard; its
+    doc-length sentinel, built from the tf sums, dropped)."""
+    from pyspark.sql import functions as F
+
+    doclens = postings.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
+    return build_segments(postings, 1, doclens).filter(
+        F.col("term") != DOCLEN_TERM
+    ).collect()[0].asDict()
 
 
 @pytest.fixture(scope="module")
@@ -47,13 +60,26 @@ def oracle():
 
 
 def test_segment_roundtrip_vs_postings(spark, oracle, index_dir):
+    """Every term row decodes to the oracle's postings of its shard, and
+    each shard's sentinel row to the oracle's (doc_id, true length,
+    Char4 byte) triples of the docs assigned to it."""
     segs = spark.read.parquet(f"{index_dir}/segments")
     want = {}
     for term, d, tf, pos in oracle.postings():
         want.setdefault((d % 4, term), []).append((d, tf, tuple(pos)))
+    want_lens = {}
+    for d, (n, c) in enumerate(zip(oracle.doclens, oracle.doclen_chars)):
+        want_lens.setdefault(d % 4, []).append((d, n, c))
     got = {}
+    got_lens = {}
     for r in segs.collect():
         row = r.asDict()
+        if row["term"] == DOCLEN_TERM:
+            ids, chars, lens = decode_doclen_sentinel(row)
+            got_lens[row["shard_id"]] = [
+                (int(d), int(n), int(c)) for d, n, c in zip(ids, lens, chars)
+            ]
+            continue
         doc_ids, tfs, positions = decode_segment_row(row, with_positions=True)
         got[(row["shard_id"], row["term"])] = [
             (int(d), int(t), tuple(int(x) for x in p))
@@ -63,6 +89,7 @@ def test_segment_roundtrip_vs_postings(spark, oracle, index_dir):
         # posting_list_delta.h:412-415 enforces this at insert)
         assert np.all(np.diff(doc_ids) > 0)
     assert got == {k: sorted(v) for k, v in want.items()}
+    assert got_lens == want_lens
 
 
 def test_segment_offsets_roundtrip(spark):
@@ -97,7 +124,8 @@ def test_segment_offsets_roundtrip(spark):
 
     mapside = build_segments_mapside(docs, n_shards=2).collect()
     shuffle = build_segments(
-        build_postings_arrow(docs, with_offsets=True), n_shards=2
+        build_postings_arrow(docs, with_offsets=True), 2,
+        build_docstats(docs),
     ).collect()
     assert check(mapside) == check(shuffle) > 1000
 
@@ -106,7 +134,7 @@ def test_skip_entries_partial_decode(spark):
     """Skip rows every 128 postings allow decoding from a bag boundary."""
     rows = [("t", i * 3, 1 + (i % 5)) for i in range(400)]  # one term, 400 docs
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    seg = build_segments(postings, n_shards=1).collect()[0].asDict()
+    seg = _term_row(postings)
     assert len(seg["skip_predocs"]) == 4  # ceil(400/128)
     assert seg["skip_predocs"][0] == 0
     assert seg["skip_predocs"][1] == 127 * 3  # docID preceding bag 1
@@ -126,7 +154,7 @@ def test_selective_decode_reads_only_needed_bags(spark):
 
     rows = [("t", i * 3, 1 + (i % 5)) for i in range(700)]  # 6 bags
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    seg = build_segments(postings, n_shards=1).collect()[0].asDict()
+    seg = _term_row(postings)
     full_ids, full_tfs, _ = decode_segment_row(seg)
     # candidates: a few real docIDs in bags 0 and 4, plus a bag-boundary
     # docID (== skip_predocs[b], the LAST doc of the previous bag) and
@@ -197,7 +225,7 @@ def test_bag_cache_shares_decodes_across_queries(spark):
 
     rows = [("t", i * 2, 1 + (i % 7)) for i in range(700)]  # 6 bags
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf int")
-    seg = build_segments(postings, n_shards=1).collect()[0].asDict()
+    seg = _term_row(postings)
     full_ids, full_tfs, _ = decode_segment_row(seg)
     cache: dict = {}
     cand1 = np.array([0, 2 * 150], dtype=np.int64)         # bags 0 and 1
@@ -308,10 +336,6 @@ def test_warmup_and_jobless_dictionary_cache(spark, index_dir):
     assert "n_terms" in idx.meta and idx.meta["n_terms"] > 0
     assert idx.warmup() is idx and idx._dict_mem is not None
     assert len(idx._dict_mem) == idx.meta["n_terms"]
-    # let the load-time doclens prefetch job finish first — it is a
-    # background job from __init__, not a lookup cost (r06 second pass)
-    if idx._doclens_prefetch_thread is not None:
-        idx._doclens_prefetch_thread.join(timeout=60)
     # jobless from here: lookups hit the driver dict
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
@@ -366,40 +390,6 @@ def test_segment_search_rank_identical_to_oracle(
         assert r["score"] == pytest.approx(score, rel=1e-12)
 
 
-def test_compact_index_written_before_skip_max_tfs(spark, tmp_path,
-                                                   index_dir):
-    """An index written before the skip_max_tfs column existed must
-    still compact: missing columns ride as nulls and the merge
-    re-encodes them fresh (so the compacted index even gains the
-    block-max column)."""
-    import shutil
-
-    from wiser_spark.operators.segments import compact_index
-
-    legacy = str(tmp_path / "legacy")
-    shutil.copytree(index_dir, legacy)
-    # rewrite the segments without the round-3 columns NOR the offsets
-    # column (binary missing -> filled with the documented b"" degrade
-    # value, arrays -> empty)
-    old = spark.read.parquet(f"{index_dir}/segments").drop(
-        "skip_max_tfs", "off_blob", "skip_off_offs"
-    )
-    shutil.rmtree(f"{legacy}/segments")
-    old.write.partitionBy("shard_id").parquet(f"{legacy}/segments")
-    out = str(tmp_path / "compacted")
-    compact_index(spark, legacy, out)
-    for ph in (False, True):
-        want = [tuple(r) for r in SegmentIndex(spark, index_dir)
-                .search(["return", "import"], k=10, is_phrase=ph).collect()]
-        got = [tuple(r) for r in SegmentIndex(spark, out)
-               .search(["return", "import"], k=10, is_phrase=ph).collect()]
-        assert got == want and len(got) == 10
-    # the compacted rows carry the re-derived block-max column
-    seg = spark.read.parquet(f"{out}/segments").filter(
-        "term = 'return'").collect()[0]
-    assert seg["skip_max_tfs"] is not None and len(seg["skip_max_tfs"]) > 0
-
-
 def test_term_prefix_pushdown_and_identity(spark, tmp_path):
     """term_prefix = the trie .tip's prefix seek: results equal a full
     dictionary filter, absent prefixes are empty, and a COLD dictionary
@@ -450,10 +440,6 @@ def test_overcap_lookup_memoized_jobless(spark, index_dir):
     from the per-process memo with ZERO Spark jobs (r06, VERDICT 7)."""
     idx = SegmentIndex(spark, index_dir)
     idx.DICT_DRIVER_CACHE_MAX = 0  # force the over-cap path
-    # let the load-time doclens prefetch job finish — a background job
-    # from __init__, not a lookup cost (r06 second pass)
-    if idx._doclens_prefetch_thread is not None:
-        idx._doclens_prefetch_thread.join(timeout=60)
     first = idx._dict_lookup(["return", "zz_never_there_zz"])
     assert "return" in first and "zz_never_there_zz" not in first
     tracker = spark.sparkContext.statusTracker()
@@ -468,24 +454,3 @@ def test_overcap_lookup_memoized_jobless(spark, index_dir):
     assert mid > after
     idx._dict_lookup(["import", "return"])
     assert len(tracker.getJobIdsForGroup(None) or []) == mid
-
-
-def test_doclens_prefetch_fills_in_background(spark, index_dir):
-    """v1 indexes prefetch the shard-keyed doc-length cache at load
-    (engine-load state, like the dictionary): after the background
-    thread completes, the cache exists without any query having run —
-    and a query then returns the same rows as a fresh, non-prefetched
-    path would."""
-    idx = SegmentIndex(spark, index_dir)
-    assert idx._doclens_prefetch_thread is not None
-    idx._doclens_prefetch_thread.join(timeout=120)
-    assert idx._doclens is not None
-    got = idx.search(["return", "import"], k=5).collect()
-    # same index, prefetch bypassed (fresh instance, thread joined then
-    # cache dropped so the query rebuilds it inline)
-    idx2 = SegmentIndex(spark, index_dir)
-    if idx2._doclens_prefetch_thread is not None:
-        idx2._doclens_prefetch_thread.join(timeout=120)
-    idx2._doclens = None
-    want = idx2.search(["return", "import"], k=5).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]

@@ -183,7 +183,7 @@ def test_add_document_flow(spark, tmp_path):
     d = str(tmp_path / "live_idx")
     cfg = IndexConfig(bm25=BM25Params(0.9, 0.4), n_shards=2)
     indexer = IncrementalIndexer(
-        d, cfg, order_cols=("url", "title"), fmt="v2"
+        d, cfg, order_cols=("url", "title")
     )
     seed = spark.createDataFrame(
         [("u0", "t0", "seed corpus zebra walrus")],
@@ -311,7 +311,7 @@ def test_flush_retry_after_commit_failure_no_duplicates(
     d = str(tmp_path / "idx")
     indexer = IncrementalIndexer(
         d, IndexConfig(bm25=BM25Params(0.9, 0.4), n_shards=2),
-        order_cols=("url", "title"), fmt="v2",
+        order_cols=("url", "title"),
     )
     indexer.process_batch(spark.createDataFrame(
         [("u0", "t0", "seed zebra")],
@@ -358,7 +358,7 @@ def test_flush_preserves_serving_tuning(spark, tmp_path):
     d = str(tmp_path / "idx")
     indexer = IncrementalIndexer(
         d, IndexConfig(bm25=BM25Params(0.9, 0.4), n_shards=2),
-        order_cols=("url", "title"), fmt="v2",
+        order_cols=("url", "title"),
     )
     indexer.process_batch(spark.createDataFrame(
         [("u0", "t0", "seed zebra")],
@@ -418,7 +418,7 @@ def test_adds_between_failed_flush_and_retry_wait_for_next_flush(
     d = str(tmp_path / "idx")
     indexer = IncrementalIndexer(
         d, IndexConfig(bm25=BM25Params(0.9, 0.4), n_shards=2),
-        order_cols=("url", "title"), fmt="v2",
+        order_cols=("url", "title"),
     )
     indexer.process_batch(spark.createDataFrame(
         [("u0", "t0", "seed zebra")],
@@ -484,7 +484,7 @@ def test_concurrent_searches_during_flush(spark, tmp_path):
     d = str(tmp_path / "idx")
     indexer = IncrementalIndexer(
         d, IndexConfig(bm25=BM25Params(0.9, 0.4), n_shards=2),
-        order_cols=("url", "title"), fmt="v2",
+        order_cols=("url", "title"),
     )
     indexer.process_batch(spark.createDataFrame(
         [(f"u{i}", f"t{i}", f"zebra walrus w{i % 5}") for i in range(20)],

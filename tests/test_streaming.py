@@ -6,6 +6,7 @@ import os
 import pytest
 
 from wiser_spark.config import BM25Params, IndexConfig
+from wiser_spark.functions.tokenize import doclen_text
 from wiser_spark.operators.segments import SegmentIndex
 from wiser_spark.oracle import OracleEngine
 from wiser_spark.sources.corpus import make_corpus
@@ -35,6 +36,22 @@ def streamed(spark, tmp_path_factory):
     ingest(rows[:40])   # generation 0
     ingest(rows[40:])   # generation 1 (only new files processed)
     return index_dir, rows
+
+
+def _sentinel_doc_ids(spark, index_dir):
+    """Every doc id the index's sentinel rows record, across all
+    generations (each doc sits in exactly one sentinel row)."""
+    from wiser_spark.operators.segments import (
+        DOCLEN_TERM,
+        decode_doclen_sentinel,
+    )
+
+    rows = spark.read.parquet(f"{index_dir}/segments").filter(
+        f"term = '{DOCLEN_TERM}'"
+    ).collect()
+    return sorted(
+        int(d) for r in rows for d in decode_doclen_sentinel(r.asDict())[0]
+    )
 
 
 @pytest.fixture(scope="module")
@@ -92,16 +109,11 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     d = str(tmp_path / "idx")
     ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=2))
     ix.process_batch(df, 0)
-    n1 = spark.read.parquet(f"{d}/docstats").count()
-    ids1 = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{d}/docstats").collect()
-    )
+    ids1 = _sentinel_doc_ids(spark, d)
     ix.process_batch(df, 0)  # replay
-    assert spark.read.parquet(f"{d}/docstats").count() == n1 == 30
+    assert _sentinel_doc_ids(spark, d) == ids1
     ix.process_batch(spark.createDataFrame(make_corpus(40)[30:], SCHEMA), 1)
-    ids2 = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{d}/docstats").collect()
-    )
+    ids2 = _sentinel_doc_ids(spark, d)
     # dense continuation: batch 1 starts exactly where batch 0 ended
     assert ids2 == list(range(40)) and ids1 == list(range(30))
     idx = SegmentIndex(spark, d)
@@ -126,36 +138,20 @@ def test_staging_leftover_replaced_on_retry(spark, tmp_path):
     # simulate the crash: generation published but commit record lost
     os.remove(f"{d}/commits.json")
     ix.process_batch(df, 0)  # retry
+    lensum = sum(doclen_text(r["content"]) for r in rows)
     with open(f"{d}/commits.json") as f:
-        assert json.load(f) == {"0": [0, 20]}
-    assert spark.read.parquet(f"{d}/docstats").count() == 20
-    got = sorted(r["doc_id"] for r in spark.read.parquet(f"{d}/docstats").collect())
-    assert got == list(range(20))
+        assert json.load(f) == {"0": [0, 20, lensum]}
+    assert _sentinel_doc_ids(spark, d) == list(range(20))
 
 
-@pytest.fixture(scope="module")
-def streamed_v2(spark, tmp_path_factory, oracle):
-    """Two v2 (map-side) generations ingested via the idempotent sink."""
-    from wiser_spark.streaming.incremental import IncrementalIndexer
-
-    d = str(tmp_path_factory.mktemp("stream_v2") / "idx")
-    rows = make_corpus(90)
-    ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=3), fmt="v2")
-    ix.process_batch(spark.createDataFrame(rows[:40], SCHEMA), 0)
-    ix.process_batch(spark.createDataFrame(rows[40:], SCHEMA), 1)
-    return d
-
-
-def test_stream_v2_multigeneration_queries(spark, streamed_v2, oracle):
-    """v2 streaming generations (sentinels + blooms in the segment
-    table, no docstats dir) answer rank-identically before compaction."""
-    import os
-
-    assert not os.path.exists(f"{streamed_v2}/docstats")
-    idx = SegmentIndex(spark, streamed_v2)
+def test_stream_v2_multigeneration_queries(spark, streamed, oracle):
+    """Streaming generations (sentinels + blooms in the segment table,
+    no docstats dir) answer rank-identically before compaction."""
+    assert not os.path.exists(f"{streamed[0]}/docstats")
+    idx = SegmentIndex(spark, streamed[0])
     assert idx.stats.n_docs == 90
     assert idx.stats.avgdl == pytest.approx(oracle.avgdl, rel=1e-12)
-    assert idx.has_sentinel and idx.bloom_cfg is not None
+    assert idx.bloom_cfg is not None
     for terms, ph in [(["return"], False), (["return", "import"], False),
                       (["if", "else"], True)]:
         got = idx.search(terms, k=10, is_phrase=ph).collect()
@@ -166,9 +162,9 @@ def test_stream_v2_multigeneration_queries(spark, streamed_v2, oracle):
 
 
 def test_stream_v2_compaction_merges_sentinels_and_blooms(
-    spark, streamed_v2, oracle, tmp_path
+    spark, streamed, oracle, tmp_path
 ):
-    """compact_index on a v2 streaming index merges plain rows AND the
+    """compact_index on a streaming index merges plain rows AND the
     sentinel doc-length rows AND both bloom sides into one row per
     (shard, term); the compacted index answers the full suite
     rank-identically, with bloom pruning active again."""
@@ -179,8 +175,8 @@ def test_stream_v2_compaction_merges_sentinels_and_blooms(
         compact_index,
     )
 
-    out = str(tmp_path / "compacted_v2")
-    compact_index(spark, streamed_v2, out)
+    out = str(tmp_path / "compacted_stream")
+    compact_index(spark, streamed[0], out)
     segs = spark.read.parquet(f"{out}/segments")
     per_key = (
         segs.groupBy("shard_id", "term").count()
@@ -222,31 +218,78 @@ def test_stream_query_rank_identical(spark, streamed, oracle, terms, is_phrase):
         assert r["score"] == pytest.approx(s, rel=1e-12)
 
 
-def test_resume_with_other_format_refuses(tmp_path):
-    """Resuming an existing index with the OTHER fmt would corrupt it
-    (v1 generations carry no sentinels / no lensum in the commit log);
-    the constructor must refuse loudly."""
+def test_resume_with_other_format_refuses(spark, tmp_path):
+    """Indexes and journals of removed layouts are refused loudly,
+    naming the index, instead of failing inside a worker or silently
+    losing documents: an index whose stats.json lacks doclen_sentinel
+    (doc lengths in a separate docstats table) is refused by
+    SegmentIndex, IncrementalIndexer and compact_index; the indexer
+    takes no format but fmt="v2"; a compaction journal whose target is
+    one of the generations it removes is refused with nothing touched;
+    and a journal with no generations manifest beside it fails the read
+    and is refused by recovery, with nothing touched."""
     import json
 
+    import wiser_spark.streaming.incremental as incmod
+    from wiser_spark.operators.segments import compact_index, read_segments
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
     d = str(tmp_path / "idx")
     os.makedirs(d)
     with open(f"{d}/stats.json", "w") as f:
-        json.dump({"format": "wiser-spark-segment-v1"}, f)
-    IncrementalIndexer(d, fmt="v1")  # same format: fine
-    with pytest.raises(ValueError, match="cannot resume"):
-        IncrementalIndexer(d, fmt="v2")
-    with open(f"{d}/stats.json", "w") as f:
-        json.dump({"format": "wiser-spark-segment-v2-mapside"}, f)
-    IncrementalIndexer(d, fmt="v2")
-    with pytest.raises(ValueError, match="cannot resume"):
-        IncrementalIndexer(d, fmt="v1")
+        json.dump({"format": "wiser-spark-segment-v1", "n_docs": 1,
+                   "avgdl": 1.0, "k1": 1.2, "b": 0.75}, f)
+    for open_index in (
+        lambda: SegmentIndex(spark, d),
+        lambda: IncrementalIndexer(d),
+        lambda: compact_index(spark, d, str(tmp_path / "out")),
+    ):
+        with pytest.raises(ValueError, match="doclen_sentinel") as e:
+            open_index()
+        assert d in str(e.value)
+    IncrementalIndexer(str(tmp_path / "fresh"), fmt="v2")
+    with pytest.raises(ValueError, match="unknown streaming index format"):
+        IncrementalIndexer(str(tmp_path / "fresh"), fmt="v1")
+
+    # a journal reusing a live generation id as its target
+    j = str(tmp_path / "journal")
+    for g in (0, 1):
+        os.makedirs(f"{j}/segments/generation={g}")
+    os.makedirs(f"{j}/_staging/compact/segments")
+    incmod._write_generations(j, [0, 1])
+    with open(f"{j}/compaction.json", "w") as f:
+        json.dump({"remove": [0, 1], "target": 1,
+                   "staging": "_staging/compact", "tables": ["segments"]}, f)
+    with pytest.raises(ValueError, match="also removes"):
+        incmod.recover_compaction(j, sweep=True)
+    assert sorted(os.listdir(f"{j}/segments")) == [
+        "generation=0", "generation=1"
+    ]
+    assert os.path.isdir(f"{j}/_staging/compact/segments")
+    assert os.path.exists(f"{j}/compaction.json")
+    assert incmod.read_generations(j) == [0, 1]
+    assert not os.path.exists(f"{j}/compaction.lock")  # released
+    # a journal with no manifest: nothing consistent to read, and
+    # recovery refuses it untouched
+    os.remove(f"{j}/generations.json")
+    with pytest.raises(ValueError, match="no generations manifest"):
+        read_segments(spark, j)
+    with open(f"{j}/compaction.json", "w") as f:
+        json.dump({"remove": [0], "target": 2,
+                   "staging": "_staging/compact", "tables": ["segments"]}, f)
+    with pytest.raises(ValueError, match="no generations manifest"):
+        incmod.recover_compaction(j, sweep=True)
+    assert sorted(os.listdir(f"{j}/segments")) == [
+        "generation=0", "generation=1"
+    ]
+    assert os.path.isdir(f"{j}/_staging/compact/segments")
+    assert os.path.exists(f"{j}/compaction.json")
+    assert not os.path.exists(f"{j}/compaction.lock")
 
 
 def test_auto_compaction_tiered_trigger(spark, tmp_path, oracle,
                                         monkeypatch):
-    """A 20-generation v2 stream with compact_every=6 compacts
+    """A 20-generation stream with compact_every=6 compacts
     automatically (generation count never exceeds the tier after a
     commit; merges are SIZE-TIERED — smallest generations first),
     answers the BM25 suite rank-identically to an UNCOMPACTED twin fed
@@ -258,8 +301,8 @@ def test_auto_compaction_tiered_trigger(spark, tmp_path, oracle,
     cfg = IndexConfig(bm25=PARAMS, n_shards=3)
     d_auto = str(tmp_path / "auto")
     d_plain = str(tmp_path / "plain")
-    ix_auto = IncrementalIndexer(d_auto, cfg, fmt="v2", compact_every=6)
-    ix_plain = IncrementalIndexer(d_plain, cfg, fmt="v2")
+    ix_auto = IncrementalIndexer(d_auto, cfg, compact_every=6)
+    ix_plain = IncrementalIndexer(d_plain, cfg)
     for b in range(20):
         batch = spark.createDataFrame(rows[b * 10 : (b + 1) * 10], SCHEMA)
         ix_auto.process_batch(batch, b)
@@ -319,104 +362,6 @@ def test_auto_compaction_tiered_trigger(spark, tmp_path, oracle,
     assert got == want
 
 
-def _torn_legacy_state(spark, tmp_path, monkeypatch, n_docs=60):
-    """A 3-generation v2 index with a LEGACY-format torn compaction:
-    staged merge of generations [0, 1] on disk, journal whose target
-    REUSES live id 1 (pre-round-5 writers did this), no generations
-    manifest (legacy indexes predate it). Returns (index_dir, twin_dir,
-    indexer)."""
-    import json
-    import shutil
-
-    import wiser_spark.streaming.incremental as incmod
-    from wiser_spark.streaming.incremental import IncrementalIndexer
-
-    rows = make_corpus(n_docs)
-    cfg = IndexConfig(bm25=PARAMS, n_shards=3)
-    d = str(tmp_path / "legacy")
-    d_twin = str(tmp_path / "twin")
-    ix = IncrementalIndexer(d, cfg, fmt="v2")
-    tw = IncrementalIndexer(d_twin, cfg, fmt="v2")
-    step = n_docs // 3
-    for b in range(3):
-        batch = spark.createDataFrame(
-            rows[b * step : (b + 1) * step], SCHEMA
-        )
-        ix.process_batch(batch, b)
-        tw.process_batch(batch, b)
-    # stage the merge of [0, 1] but "crash" before any apply
-    monkeypatch.setattr(incmod, "recover_compaction", lambda *a, **k: None)
-    ix.compact_generations(spark, [0, 1])
-    monkeypatch.undo()
-    assert os.path.exists(f"{d}/compaction.json")
-    # rewrite the journal into the legacy shape: target = max of the
-    # merged subset (IN the remove list), and drop the manifest (legacy
-    # writers never produced one)
-    with open(f"{d}/compaction.json") as f:
-        j = json.load(f)
-    src = f"{d}/segments/generation={j['target']}"
-    if os.path.isdir(src):  # partially applied? ensure torn pre-install
-        shutil.rmtree(src)
-    j["target"] = 1
-    with open(f"{d}/compaction.json", "w") as f:
-        json.dump(j, f)
-    os.remove(f"{d}/generations.json")
-    return d, d_twin, ix
-
-
-def test_legacy_journal_recovery_replaces_target(spark, tmp_path,
-                                                 monkeypatch):
-    """A legacy journal's target is a LIVE generation id: recovery must
-    replace that dir with the staged merge — treating 'dst exists' as
-    'already installed' would silently drop the staged merge and then
-    delete generation 0's documents."""
-    import wiser_spark.streaming.incremental as incmod
-
-    d, d_twin, ix = _torn_legacy_state(spark, tmp_path, monkeypatch)
-    incmod.recover_compaction(d, sweep=True)
-    assert not os.path.exists(f"{d}/compaction.json")
-    gens = sorted(
-        int(p.split("=", 1)[1])
-        for p in os.listdir(f"{d}/segments")
-        if p.startswith("generation=")
-    )
-    assert gens == [1, 2]  # 0 merged away, 1 REPLACED by the merge
-    idx = SegmentIndex(spark, d)
-    twin = SegmentIndex(spark, d_twin)
-    assert idx.stats.n_docs == twin.stats.n_docs == 60
-    for terms, ph in [(["return"], False), (["return", "import"], False),
-                      (["return", "import"], True)]:
-        got = [tuple(r) for r in
-               idx.search(terms, k=10, is_phrase=ph).collect()]
-        want = [tuple(r) for r in
-                twin.search(terms, k=10, is_phrase=ph).collect()]
-        assert got == want and got, (terms, ph)
-
-
-def test_legacy_pre_manifest_torn_index_heals_on_read(spark, tmp_path,
-                                                      monkeypatch):
-    """A pre-manifest index with a pending journal has NO consistent
-    directory fallback: the read path must roll the journal forward
-    (lock-serialized) instead of silently listing a torn directory —
-    and must fail LOUDLY when another process holds the lock."""
-    d, d_twin, ix = _torn_legacy_state(spark, tmp_path, monkeypatch)
-    # a held (fresh) lock: reading must refuse rather than return a
-    # silently incomplete index
-    lock = f"{d}/compaction.lock"
-    with open(lock, "w"):
-        pass
-    with pytest.raises(RuntimeError, match="compaction.lock"):
-        SegmentIndex(spark, d)
-    os.remove(lock)
-    idx = SegmentIndex(spark, d)  # heals via lock-serialized recovery
-    assert not os.path.exists(f"{d}/compaction.json")
-    twin = SegmentIndex(spark, d_twin)
-    got = [tuple(r) for r in idx.search(["return", "import"], k=10).collect()]
-    want = [tuple(r) for r in
-            twin.search(["return", "import"], k=10).collect()]
-    assert got == want and got
-
-
 def test_stale_lock_stolen_by_rename(spark, tmp_path, monkeypatch):
     """A compaction.lock older than LOCK_STALE_S belongs to a dead
     process: recovery steals it (by rename — two stealers cannot both
@@ -424,8 +369,21 @@ def test_stale_lock_stolen_by_rename(spark, tmp_path, monkeypatch):
     import time
 
     import wiser_spark.streaming.incremental as incmod
+    from wiser_spark.streaming.incremental import IncrementalIndexer
 
-    d, d_twin, ix = _torn_legacy_state(spark, tmp_path, monkeypatch)
+    # torn compaction: the merge of generations [0, 1] staged and
+    # journalled, the swap never applied
+    rows = make_corpus(40)
+    d = str(tmp_path / "idx")
+    ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=3))
+    for b in range(2):
+        ix.process_batch(
+            spark.createDataFrame(rows[b * 20 : (b + 1) * 20], SCHEMA), b
+        )
+    monkeypatch.setattr(incmod, "recover_compaction", lambda *a, **k: None)
+    ix.compact_generations(spark, [0, 1])
+    monkeypatch.undo()
+    assert os.path.exists(f"{d}/compaction.json")
     lock = f"{d}/compaction.lock"
     with open(lock, "w"):
         pass
@@ -434,6 +392,7 @@ def test_stale_lock_stolen_by_rename(spark, tmp_path, monkeypatch):
     incmod.recover_compaction(d)
     assert not os.path.exists(f"{d}/compaction.json")  # applied
     assert not os.path.exists(lock)                    # released
+    assert len(ix._generations()) == 1
 
 
 def test_empty_microbatch_fast_path(spark, tmp_path):
@@ -445,8 +404,7 @@ def test_empty_microbatch_fast_path(spark, tmp_path):
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
     d = str(tmp_path / "idx")
-    ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=2),
-                            fmt="v2")
+    ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=2))
     empty = spark.createDataFrame([], SCHEMA)
     prep = ix.prepare_batch(empty)
     assert prep["n_docs"] == 0 and prep["pinned"] is None
@@ -470,8 +428,7 @@ def test_commit_failure_releases_pinned_layout(spark, tmp_path,
     from wiser_spark.streaming.incremental import IncrementalIndexer
 
     d = str(tmp_path / "idx")
-    ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=2),
-                            fmt="v2")
+    ix = IncrementalIndexer(d, IndexConfig(bm25=PARAMS, n_shards=2))
     df = spark.createDataFrame(make_corpus(15), SCHEMA)
     prep = ix.prepare_batch(df)
     pinned = prep["pinned"]

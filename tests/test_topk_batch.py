@@ -159,7 +159,10 @@ def test_batch_dedups_repeated_shapes(spark):
             assert got[rep * 10 + i] == want[i], (rep, i)
 
 
-def test_segment_batch_dedups_repeated_shapes(spark, tmp_path):
+def test_segment_batch_repeated_shapes_correct(spark, tmp_path):
+    """A log repeating the same shapes under many query_ids answers
+    every id exactly as the one-per-shape log does (the segment kernel
+    answers each id; only the decode is shared)."""
     from wiser_spark.config import IndexConfig
     from wiser_spark.operators.mapside import write_index_mapside
     from wiser_spark.operators.segments import SegmentIndex
@@ -190,3 +193,36 @@ def test_segment_batch_dedups_repeated_shapes(spark, tmp_path):
     for rep in range(3):
         for i in range(2):
             assert got[rep * 10 + i] == want[i], (rep, i)
+
+
+def test_batch_rejects_duplicate_query_ids(spark):
+    """A log that repeats a query_id is malformed input: the relational
+    batch refuses it instead of emitting that id's rows twice."""
+    docs = assign_doc_ids(corpus_df(spark, 20), n_partitions=2)
+    postings = build_postings(docs)
+    docstats = build_docstats(docs)
+    log = [(0, ["return"], False), (1, ["import"], False),
+           (0, ["def"], False)]
+    with pytest.raises(ValueError, match="repeats query_id 0"):
+        bm25_topk_batch(
+            postings, docstats, build_dictionary(postings),
+            corpus_stats(docstats), log, k=10, params=PARAMS,
+        )
+
+
+def test_segment_batch_rejects_duplicate_query_ids(spark, tmp_path):
+    """The segment kernel refuses a repeated query_id too: both rows
+    would enter one rank window and the same winner would fill two
+    ranks."""
+    from wiser_spark.config import IndexConfig
+    from wiser_spark.operators.mapside import write_index_mapside
+    from wiser_spark.operators.segments import SegmentIndex
+
+    docs = assign_doc_ids(corpus_df(spark, 20), n_partitions=2).select(
+        "doc_id", "content"
+    )
+    d = str(tmp_path / "idx_dup")
+    write_index_mapside(docs, d, IndexConfig(bm25=PARAMS, n_shards=2))
+    idx = SegmentIndex(spark, d)
+    with pytest.raises(ValueError, match="repeats query_id 3"):
+        idx.search_batch([(3, ["return"], False), (3, ["return"], False)])

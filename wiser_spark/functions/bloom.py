@@ -14,8 +14,9 @@ SIZING matches the reference's libbloom math exactly
 bits = int(entries * bpe), bytes rounded up, k = ceil(ln(2) * bpe) —
 with the reference defaults entries=5, ratio=0.001
 (``create_qq_mem_dump.cc:14-15``) that is 71 bits / 9 bytes / k=10 per
-posting. Bit positions come from md5 double hashing
-(bit_i = (a + i*b) mod bits, a/b from the term's md5) rather than the
+posting. Bit positions come from md5 enhanced double hashing
+(bit_i = (a + i*b + (i^3 - i)/6) mod bits, a/b from the term's md5)
+rather than the
 reference's murmur pair — the hash family is not part of the contract;
 what matters (and is tested) is NO FALSE NEGATIVES: every token OR'd in
 probes positive, so the pre-check only prunes and is provably
@@ -30,10 +31,6 @@ document edge) stores nothing and reads back as an all-zero filter
 (probes negative, correctly). Per-box byte offsets ride in the segment
 row's skip column — the analogue of the reference's BloomSkipList
 (``flash_containers.h:616-646``).
-
-The legacy 64-bit/k=2 single-word helpers (token_bloom_bits et al.)
-remain for indexes written before the sized format and for the
-prune-rate comparison test.
 """
 
 from __future__ import annotations
@@ -57,13 +54,10 @@ class BloomParams(NamedTuple):
     hashes: int
     entries: int
     ratio: float
-    # bit-placement hash FAMILY, part of the on-disk contract: "dh" =
-    # plain double hashing (every index written before round 4), "edh"
-    # = enhanced double hashing (the round-4+ default). The default
-    # here is "dh" ON PURPOSE: BloomParams(**meta["bloom"]) from an
-    # older stats.json (which predates the field) must reconstruct the
-    # family those masks were WRITTEN with, or probes false-negative.
-    family: str = "dh"
+    # bit-placement hash family, recorded in stats.json: "edh" =
+    # enhanced double hashing, the only one written or read (an index
+    # from before the field is refused by segments.check_layout)
+    family: str = "edh"
 
 
 def bloom_params(entries: int = 5, ratio: float = 0.0009) -> BloomParams:
@@ -79,7 +73,7 @@ def bloom_params(entries: int = 5, ratio: float = 0.0009) -> BloomParams:
     bits = int(entries * bpe)
     nbytes = bits // 8 + (1 if bits % 8 else 0)
     hashes = int(math.ceil(_LN2 * bpe))
-    return BloomParams(bits, nbytes, hashes, entries, ratio, "edh")
+    return BloomParams(bits, nbytes, hashes, entries, ratio)
 
 
 def token_bloom_mask(term: str, bp: BloomParams) -> np.ndarray:
@@ -95,17 +89,9 @@ def token_bloom_mask(term: str, bp: BloomParams) -> np.ndarray:
     # member terms degenerate the FP rate. The cubic increment breaks
     # the shared-progression structure for ANY modulus — measured FP
     # returns to the ~ratio ballpark (pinned by the prune-rate test).
-    # Family "dh" — the pre-round-4 plain progression, kept verbatim so
-    # indexes whose stats.json predates the family field still probe
-    # the masks they stored (the family IS part of the on-disk
-    # contract; stats.json records it via BloomParams._asdict()).
     b = 1 + int.from_bytes(h[8:16], "little") % (bp.bits - 1)
     i_arr = np.arange(bp.hashes, dtype=np.uint64)
-    incr = (
-        (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
-        if bp.family == "edh"
-        else np.zeros(bp.hashes, dtype=np.uint64)
-    )
+    incr = (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
     idx = (
         (np.uint64(a) + i_arr * np.uint64(b) + incr) % np.uint64(bp.bits)
     ).astype(np.int64)
@@ -124,13 +110,9 @@ def vocab_bloom_matrix(uniques, bp: BloomParams) -> np.ndarray:
     digests = b"".join(hashlib.md5(t.encode()).digest() for t in uniques)
     ab = np.frombuffer(digests, dtype="<u8").reshape(v, 2)
     b = (ab[:, 1] % np.uint64(bp.bits - 1)) + np.uint64(1)
-    # same family dispatch as token_bloom_mask, formula-identical
+    # formula-identical to token_bloom_mask
     i_arr = np.arange(bp.hashes, dtype=np.uint64)
-    incr = (
-        (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
-        if bp.family == "edh"
-        else np.zeros(bp.hashes, dtype=np.uint64)
-    )
+    incr = (i_arr * (i_arr * i_arr - 1) // np.uint64(6)) % np.uint64(bp.bits)
     idx = (
         (ab[:, 0][:, None] + i_arr[None, :] * b[:, None] + incr[None, :])
         % np.uint64(bp.bits)
@@ -269,38 +251,3 @@ def bloom_boxes_decode(
         got += take
         pos += 2 + bm_len + k * nbytes
     return out
-
-
-# ----------------------------------------------- legacy 64-bit rendition
-BLOOM_BITS = 64
-
-
-def token_bloom_bits(term: str) -> int:
-    """Legacy fixed-64-bit mask (k=2 md5 bit positions) — kept for
-    indexes written before the sized bloom-box format."""
-    h = hashlib.md5(term.encode()).digest()
-    h1 = h[0] % BLOOM_BITS
-    h2 = ((h[1] << 8) | h[2]) % BLOOM_BITS
-    return (1 << h1) | (1 << h2)
-
-
-def vocab_bloom_table(uniques) -> np.ndarray:
-    """Legacy: bits mask per vocabulary code (uint64)."""
-    return np.fromiter(
-        (token_bloom_bits(t) for t in uniques), dtype=np.uint64, count=len(uniques)
-    )
-
-
-def fold_occurrence_blooms(
-    occ_bits: np.ndarray, posting_starts: np.ndarray
-) -> np.ndarray:
-    """Legacy: OR per-occurrence uint64 masks into per-posting blooms."""
-    if occ_bits.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    return np.bitwise_or.reduceat(occ_bits, posting_starts)
-
-
-def probe(blooms: np.ndarray, qbits: int) -> np.ndarray:
-    """Legacy: True where the posting's bloom MAY contain the token."""
-    q = np.uint64(qbits)
-    return (blooms & q) == q

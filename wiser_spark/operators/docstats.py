@@ -71,8 +71,10 @@ class CorpusStats:
 def corpus_stats(docstats: DataFrame) -> CorpusStats:
     """Global N and avgdl (mean of TRUE lengths, double — the reference
     keeps a running mean of true lengths, ``doc_length_store.h:104-112``;
-    sum/n is its distributed equivalent)."""
+    sum/n is its distributed equivalent). An empty corpus gets avgdl
+    1.0, as the map-side writer and the oracle give it."""
     row = docstats.agg(
         F.count("*").alias("n"), F.avg(F.col("doclen").cast("double")).alias("avgdl")
     ).collect()[0]
-    return CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"]))
+    n = int(row["n"])
+    return CorpusStats(n_docs=n, avgdl=float(row["avgdl"]) if n else 1.0)

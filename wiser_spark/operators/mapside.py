@@ -22,8 +22,6 @@ results to the shuffle-based path and the oracle.
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -41,6 +39,7 @@ from wiser_spark.operators.segments import (
     bloom_row,
     decode_doclen_sentinel,
     doclen_sentinel_row,
+    write_meta,
 )
 
 
@@ -54,8 +53,7 @@ def build_segments_mapside(
 ) -> DataFrame:
     """docs (doc_id, content) -> segment rows + one sentinel per shard.
 
-    ``bloom_cfg`` (a BloomParams) pins the bloom sizing AND hash
-    family — a sink appending generations to an EXISTING index must
+    ``bloom_cfg`` (a BloomParams) pins the bloom sizing — a sink appending generations to an EXISTING index must
     pass the index's recorded params or the new generations' masks
     would not match the probe side (None = current defaults, right for
     fresh builds).
@@ -533,12 +531,9 @@ def write_index_mapside(
         "n_shards": n_shards_actual,
         "k1": config.bm25.k1, "b": config.bm25.b,
         "format": "wiser-spark-segment-v2-mapside",
-        "doclen_sentinel": True,
     }
     if with_blooms:
         from wiser_spark.functions.bloom import bloom_params
 
         meta["bloom"] = bloom_params()._asdict()
-    os.makedirs(index_dir, exist_ok=True)
-    with open(f"{index_dir}/stats.json", "w") as f:
-        json.dump(meta, f, indent=1)
+    write_meta(index_dir, meta)

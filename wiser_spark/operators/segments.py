@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 
 import numpy as np
 import pandas as pd
@@ -66,9 +65,11 @@ SEGMENT_SCHEMA = (
     "skip_tf_offs array<long>, skip_pos_offs array<long>, "
     "skip_off_offs array<long>, skip_max_tfs array<long>"
 )
+SEGMENT_COLS = [f.split()[0] for f in SEGMENT_SCHEMA.split(", ")]
 
-# sentinel term of a per-shard doc-length row (v2 map-side indexes): the
-# tokenizer can never emit an empty term, so "" is collision-free
+# sentinel term of a per-shard doc-length row (every index carries one
+# per shard): the tokenizer can never emit an empty term, so "" is
+# collision-free
 DOCLEN_TERM = ""
 
 # prefixes marking phrase-bloom rows for a term ("\x01"/"\x02" are
@@ -241,8 +242,10 @@ def _encode_term_flat(
 
 
 def _encode_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One shard's postings -> one segment row per term, in term order
-    (so parquet row-group min/max stats prune term lookups)."""
+    """One shard's rows -> one segment row per term, in term order (so
+    parquet row-group min/max stats prune term lookups). The shard's
+    doc lengths arrive as DOCLEN_TERM rows (tf = doclen) and become its
+    doc-length sentinel row, which sorts first."""
     shard_id = int(pdf["shard_id"].iloc[0])
     has_pos = "positions" in pdf.columns
     has_off = "offsets" in pdf.columns
@@ -253,6 +256,9 @@ def _encode_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     rows = []
     # pandas groupby gives sorted keys and C-speed index slicing
     for term, idx in pdf.groupby("term", sort=True).indices.items():
+        if term == DOCLEN_TERM:
+            rows.append(doclen_sentinel_row(shard_id, doc_arr[idx], tf_arr[idx]))
+            continue
         order = idx[np.argsort(doc_arr[idx], kind="stable")]
         flat = (
             np.concatenate([np.asarray(pos_arr[j], dtype=np.int64) for j in order])
@@ -272,26 +278,37 @@ def _encode_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def build_segments(postings: DataFrame, n_shards: int) -> DataFrame:
-    """postings (term, doc_id, tf[, positions]) -> segment rows.
+def build_segments(
+    postings: DataFrame, n_shards: int, docstats: DataFrame
+) -> DataFrame:
+    """postings (term, doc_id, tf[, positions]) + docstats (doc_id,
+    doclen) -> segment rows: each shard's doc-length sentinel row, then
+    its term rows — the layout every index carries.
 
     One Arrow group per shard: the (doc_id % n_shards) shuffle is the
     ONLY data movement of the segment stage; every term of the shard is
     encoded locally. Size n_shards so a shard's postings fit one task
     (at 10^12 docs that's simply a larger n_shards — work per shard is
     bounded by shard doc count, never by a term's global df)."""
-    with_shard = postings.withColumn(
-        "shard_id", (F.col("doc_id") % n_shards).cast("int")
+    # the doc lengths ride the postings as DOCLEN_TERM rows, so a doc's
+    # postings and its sentinel entry take the one doc -> shard
+    # assignment below. Explicit shard repartition (r06): the groupBy's
+    # own exchange is AQE-coalesced by SIZE (advisory bytes), but the
+    # encode stage is Python-CPU-bound per byte — at sf1.0 AQE folded 32
+    # shards into 18 tasks and idled a third of the machine. A
+    # user-specified repartition is never coalesced, and the groupBy
+    # reuses it with no second exchange: exactly n_shards encode tasks.
+    lens = docstats.select(
+        F.lit(DOCLEN_TERM).alias("term"), "doc_id",
+        F.col("doclen").cast(postings.schema["tf"].dataType).alias("tf"),
     )
-    # explicit shard repartition (r06): the groupBy's own exchange is
-    # AQE-coalesced by SIZE (advisory bytes), but the encode stage is
-    # Python-CPU-bound per byte — at sf1.0 AQE folded 32 shards into 18
-    # tasks and idled a third of the machine. A user-specified
-    # repartition is never coalesced, and the groupBy reuses its
-    # partitioning (no second exchange): exactly n_shards encode tasks.
-    return with_shard.repartition(n_shards, "shard_id").groupBy(
-        "shard_id"
-    ).applyInPandas(_encode_shard, SEGMENT_SCHEMA)
+    return (
+        postings.unionByName(lens, allowMissingColumns=True)
+        .withColumn("shard_id", (F.col("doc_id") % n_shards).cast("int"))
+        .repartition(n_shards, "shard_id")
+        .groupBy("shard_id")
+        .applyInPandas(_encode_shard, SEGMENT_SCHEMA)
+    )
 
 
 def prefetch_pages_col():
@@ -304,9 +321,9 @@ def dictionary_from_segments(segs: DataFrame) -> DataFrame:
     """(term, df, bytes_docid_tf, prefetch_pages) from written segment
     rows in ONE scan of three pruned columns — the .tip analogue (B13).
     df = sum(df_shard) because each doc lives in exactly one shard.
-    Sentinel and bloom rows are excluded (no-ops on v1 segments, which
-    carry neither). The single definition behind every writer: batch v1,
-    map-side v2, and the streaming sink's per-generation deltas."""
+    Sentinel and bloom rows are excluded. The single definition behind
+    every writer: the shuffle build, the map-side build, and the
+    streaming sink's per-generation deltas."""
     return (
         segs.filter(
             (F.col("term") != DOCLEN_TERM)
@@ -331,10 +348,18 @@ def write_index(
     config: IndexConfig | None = None,
 ) -> None:
     """Persist a queryable index: segments (partitioned by shard, sorted
-    by term within files so parquet min/max stats prune term lookups),
-    dictionary, doc stats, and a stats/metadata JSON."""
+    by term within files so parquet min/max stats prune term lookups;
+    each shard's doc lengths ride in its sentinel row, built from
+    ``docstats``), dictionary, and a stats/metadata JSON."""
+    from pyspark.sql import Observation
+
     config = config or IndexConfig()
-    segs = build_segments(postings, config.n_shards)
+    spark = postings.sparkSession
+    # segments: already hash-partitioned by shard_id, rows emitted in
+    # term order inside each shard — no extra shuffle before the write
+    build_segments(postings, config.n_shards, docstats).write.mode(
+        "overwrite"
+    ).partitionBy("shard_id").parquet(f"{index_dir}/segments")
     # dictionary (term, df, bytes_docid_tf, prefetch_pages) in ONE scan
     # of the written segment rows (3 pruned columns): df = sum of
     # df_shard (each doc lives in exactly one shard), bytes/pages = the
@@ -342,53 +367,46 @@ def write_index(
     # The caller-passed dictionary is not re-written — its (term, df)
     # is identical by construction (pinned by the dictionary tests)
     # and deriving here avoids a second aggregate over the postings.
-    # r06: the dictionary and docstats writes are INDEPENDENT jobs —
-    # submit them from two driver threads so the second back-fills the
-    # first's task tail (guide §2.6), and fold the vocabulary count
-    # into the dictionary write via an Observation instead of a
-    # follow-up count() job.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import Observation
-
-    spark = postings.sparkSession
+    # The vocabulary count rides the write as an Observation instead of
+    # a follow-up count() job.
     obs = Observation()
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        # the docstats write depends on nothing the segment job produces:
-        # submit it FIRST so its (tiny, FIFO-prioritized) job back-fills
-        # the tokenize/encode stages of the segment write instead of
-        # running after them (guide §2.6)
-        f_stats = pool.submit(
-            lambda: docstats.select("doc_id", "doclen", "doclen_char")
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/docstats")
-        )
-        # segments: already hash-partitioned by shard_id (the groupBy),
-        # rows emitted in term order inside each shard — no extra
-        # shuffle before the write
-        segs.write.mode("overwrite").partitionBy("shard_id").parquet(
-            f"{index_dir}/segments"
-        )
-        dict_df = dictionary_from_segments(
-            spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
-        ).observe(obs, F.count(F.lit(1)).alias("n_terms"))
-        dict_df.write.mode("overwrite").parquet(f"{index_dir}/dictionary")
-        f_stats.result()
+    dictionary_from_segments(
+        spark.read.schema(SEGMENT_SCHEMA).parquet(f"{index_dir}/segments")
+    ).observe(obs, F.count(F.lit(1)).alias("n_terms")).write.mode(
+        "overwrite"
+    ).parquet(f"{index_dir}/dictionary")
     # vocabulary size rides in the metadata so readers can size the
     # driver dictionary cache without a count() job (ADVICE r03)
-    n_terms = int(obs.get["n_terms"])
-    meta = {
+    write_meta(index_dir, {
         "n_docs": stats.n_docs,
         "avgdl": stats.avgdl,
-        "n_terms": n_terms,
+        "n_terms": int(obs.get["n_terms"]),
         "n_shards": config.n_shards,
         "k1": config.bm25.k1,
         "b": config.bm25.b,
-        "format": "wiser-spark-segment-v1",
-    }
+        "format": "wiser-spark-segment-v2",
+    })
+
+
+def write_meta(index_dir: str, meta: dict) -> None:
+    """Write ``stats.json``, marking the index's one on-disk layout: doc
+    lengths live in per-shard sentinel rows of the segment table."""
     os.makedirs(index_dir, exist_ok=True)
     with open(f"{index_dir}/stats.json", "w") as f:
-        json.dump(meta, f, indent=1)
+        json.dump({**meta, "doclen_sentinel": True}, f, indent=1)
+
+
+def check_layout(meta: dict, index_dir: str) -> None:
+    """Refuse an index written by a removed writer. Every writer marks
+    stats.json with ``doclen_sentinel``; an index without the mark keeps
+    its doc lengths in a separate docstats table, which nothing reads
+    any more — fail here, naming the index, instead of inside a worker."""
+    if not meta.get("doclen_sentinel"):
+        raise ValueError(
+            f"index at {index_dir!r} has no doc-length sentinel rows "
+            "(stats.json lacks doclen_sentinel): its layout is no longer "
+            "supported; rebuild it"
+        )
 
 
 # ---------------------------------------------------- shard query kernel
@@ -975,16 +993,13 @@ def _bloom_prune(cand, decoded, terms_l, bloom_rows, rows_by_term,
     |t0| <= |t1|, else begin bloom of t1; >2 terms fall back to the
     end-bloom chain (:784-793).
 
-    Two filter renditions, sniffed by blob magic: the sized bloom-box
-    format (reference libbloom sizing + box layout; ``bloom_cfg``
-    carries bits/bytes/hashes from the index meta) and the legacy
-    fixed-64-bit rendition of earlier indexes."""
+    Filters are sized bloom boxes (reference libbloom sizing + box
+    layout; ``bloom_cfg`` carries bits/bytes/hashes from the index
+    meta)."""
     from wiser_spark.functions.bloom import (
-        BLOOM_BOX_MAGIC,
         bloom_boxes_decode,
         bloom_params,
         probe_rows,
-        token_bloom_bits,
         token_bloom_mask,
     )
 
@@ -998,13 +1013,9 @@ def _bloom_prune(cand, decoded, terms_l, bloom_rows, rows_by_term,
         if n_post != ids.size or len(blob) == 0:
             return cnd
         at = np.searchsorted(ids, cnd)
-        if blob[0] == BLOOM_BOX_MAGIC:
-            bp = bloom_cfg or bloom_params()
-            blooms = bloom_boxes_decode(blob, n_post, bp.nbytes)
-            return cnd[probe_rows(blooms[at], token_bloom_mask(probe_term, bp))]
-        blooms = decode_column(blob, n_post)
-        qb = np.uint64(token_bloom_bits(probe_term))
-        return cnd[(blooms[at] & qb) == qb]
+        bp = bloom_cfg or bloom_params()
+        blooms = bloom_boxes_decode(blob, n_post, bp.nbytes)
+        return cnd[probe_rows(blooms[at], token_bloom_mask(probe_term, bp))]
 
     if len(terms_l) == 2:
         t0, t1 = terms_l
@@ -1070,7 +1081,8 @@ def _winner_offsets(decoded, terms_l, winners, phrase_surv, cand_pre):
             at = int(np.searchsorted(ids, doc))
             o = np.asarray(olists[at], dtype=np.int64)
             if o.size == 0:
-                # index without stored offsets (v1 streaming builds):
+                # index without stored offsets (a write_index build
+                # from postings without an offsets column):
                 # emit no spans so the snippet layer falls back to
                 # re-tokenization — also for phrase queries, which
                 # would otherwise index into the empty span array
@@ -1091,29 +1103,21 @@ def _winner_offsets(decoded, terms_l, winners, phrase_surv, cand_pre):
     return offs_col
 
 
-def _doclen_code_fn(sentinel_rows, len_pdf):
+def _doclen_code_fn(sentinel_rows):
     """Returns codes_for(cand) -> lossy doc-length byte per candidate,
-    from the in-shard sentinel rows (v2) or the cogrouped docstats slice
-    (v1). The sentinel decode / index build happens ONCE per shard, on
-    first use — the block-max path calls this per decoded bag."""
+    from the shard's in-shard sentinel rows (one per generation). The
+    sentinel decode happens ONCE per shard, on first use — the
+    block-max path calls this per decoded bag."""
     state: list = []
 
     def codes_for(cand):
         if not state:
-            if sentinel_rows is not None:
-                parts = [decode_doclen_sentinel(r) for r in sentinel_rows]
-                parts.sort(key=lambda p: int(p[0][0]) if len(p[0]) else 0)
-                sent_ids = np.concatenate([p[0] for p in parts])
-                sent_chars = np.concatenate([p[1] for p in parts])
-                state.append(("sent", sent_ids, sent_chars))
-            else:
-                state.append(
-                    ("pdf", len_pdf.set_index("doc_id")["doclen_char"], None)
-                )
-        kind, a, b = state[0]
-        if kind == "sent":
-            return b[np.searchsorted(a, cand)] & 0xFF
-        return a.reindex(cand).to_numpy(dtype=np.int64) & 0xFF
+            parts = [decode_doclen_sentinel(r) for r in sentinel_rows]
+            parts.sort(key=lambda p: int(p[0][0]) if len(p[0]) else 0)
+            state.append(np.concatenate([p[0] for p in parts]))
+            state.append(np.concatenate([p[1] for p in parts]))
+        sent_ids, sent_chars = state
+        return sent_chars[np.searchsorted(sent_ids, cand)] & 0xFF
 
     return codes_for
 
@@ -1139,10 +1143,10 @@ def compact_segments(
     re-encode; the shuffle key (shard_id, term) is bounded by the
     shard's doc count.
 
-    Handles BOTH formats: plain v1 term rows AND the v2 map-side
-    extras — sentinel doc-length rows merge by docID concatenation,
-    and each bloom SIDE merges by decoding every generation's boxes and
-    re-encoding in the merged term row's docID order. Bloom/term
+    Besides plain term rows, the sentinel doc-length rows merge by
+    docID concatenation, and each bloom SIDE merges by decoding every
+    generation's boxes and re-encoding in the merged term row's docID
+    order (a shuffle-built index carries no blooms). Bloom/term
     alignment uses the ``gen``/``generation`` column when present
     (streaming indexes partition by it); a bloom side that cannot be
     aligned unambiguously is DROPPED, which is always result-neutral:
@@ -1155,30 +1159,14 @@ def compact_segments(
     )
 
     nbytes = bloom_nbytes or bloom_params().nbytes
-    cols = [f.split()[0] for f in SEGMENT_SCHEMA.split(", ")]
-    col_types = dict(
-        f.split(" ", 1) for f in SEGMENT_SCHEMA.split(", ")
-    )
     segs = segments
-    # indexes written before a column existed (e.g. pre-skip_max_tfs,
-    # pre-off_blob) compact fine: missing BINARY columns become empty
-    # bytes (the documented degrade value — decode_segment_row treats
-    # b"" off_blob as "no offsets stored") and missing arrays become
-    # empty arrays; the merge then re-encodes whatever survives
-    for c in cols:
-        if c not in segs.columns:
-            fill = (
-                F.lit(b"") if col_types[c] == "binary"
-                else F.array().cast(col_types[c])
-            )
-            segs = segs.withColumn(c, fill)
     if "gen" not in segs.columns:
         if "generation" in segs.columns:
             segs = segs.withColumn("gen", F.col("generation").cast("long"))
         else:
             segs = segs.withColumn("gen", F.lit(0).cast("long"))
     first_c = F.substring("term", 1, 1)
-    segs = segs.select(*cols, "gen").withColumn(
+    segs = segs.select(*SEGMENT_COLS, "gen").withColumn(
         "base",
         F.when(first_c.isin(*BLOOM_PREFIXES), F.expr("substring(term, 2)"))
         .otherwise(F.col("term")),
@@ -1281,7 +1269,7 @@ def compact_segments(
         # shard doc count — the same bound the build's encode groups
         # already rely on.
         if not len(pdf):
-            return pd.DataFrame(columns=cols)
+            return pd.DataFrame(columns=SEGMENT_COLS)
         shard_id = int(pdf["shard_id"].iloc[0])
         groups: dict[str, list] = {}
         for r in pdf.to_dict("records"):
@@ -1290,8 +1278,8 @@ def compact_segments(
         for base in sorted(groups):
             out.extend(merge_base(shard_id, base, groups[base]))
         if not out:
-            return pd.DataFrame(columns=cols)
-        return pd.DataFrame(out, columns=cols)
+            return pd.DataFrame(columns=SEGMENT_COLS)
+        return pd.DataFrame(out, columns=SEGMENT_COLS)
 
     return segs.groupBy("shard_id").applyInPandas(
         merge_shard, SEGMENT_SCHEMA
@@ -1301,12 +1289,13 @@ def compact_segments(
 def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     """Compact a multi-generation index directory into a single-
     generation index at ``out_dir`` (segments merged per (shard, term)
-    — including v2 sentinel and bloom rows; docstats (if any) /
-    dictionary / stats.json carried over). Queries over the compacted
+    — including sentinel and bloom rows; dictionary / stats.json
+    carried over). Queries over the compacted
     index are identical; per-term read cost drops to one row, and
     bloom pruning re-activates (multi-generation rows skip it)."""
     with open(f"{index_dir}/stats.json") as f:
         meta = json.load(f)
+    check_layout(meta, index_dir)
     # manifest-pinned read (read_segments lacks the generation column's
     # partition discovery only for non-generational dirs, where gen=0):
     # explicit paths + basePath keep `generation` available to the merge
@@ -1330,17 +1319,10 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> None:
     compact_segments(segs, nbytes).write.mode("overwrite").partitionBy(
         "shard_id"
     ).parquet(f"{out_dir}/segments")
-    if os.path.exists(f"{index_dir}/docstats"):
-        spark.read.parquet(f"{index_dir}/docstats").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/docstats")
     spark.read.parquet(f"{index_dir}/dictionary").write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/dictionary")
-    meta["compacted"] = True
-    os.makedirs(out_dir, exist_ok=True)
-    with open(f"{out_dir}/stats.json", "w") as f:
-        json.dump(meta, f, indent=1)
+    write_meta(out_dir, {**meta, "compacted": True})
 
 
 # ------------------------------------------------------------------ read
@@ -1377,8 +1359,8 @@ def decode_segment_row(
     if not with_offsets:
         return doc_ids, tfs, positions
     if len(row["off_blob"]) == 0:
-        # index built without the offsets column (v1 streaming /
-        # positions-only builds): degrade to empty spans — the snippet
+        # index built without the offsets column (positions-only
+        # postings): degrade to empty spans — the snippet
         # path falls back to re-tokenization
         offsets = [np.zeros(0, dtype=np.int64)] * n
     else:
@@ -1394,37 +1376,20 @@ def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
     streaming/batched writers publish one; the manifest flips with one
     atomic os.replace, so this read is consistent across a concurrent
     compaction swap). Non-generational indexes (write_index /
-    write_index_mapside / compact_index outputs) and pre-manifest
-    indexes read the directory as before.
+    write_index_mapside / compact_index outputs) read the directory.
 
-    A PRE-MANIFEST index with a pending compaction journal (a legacy
-    writer crashed mid-swap) has no consistent directory state to fall
-    back on — silently listing it would drop the merged-away
-    generations' documents. Those heal here through the lock-serialized
-    ``recover_compaction`` (every journal application, including the
-    writer's own live apply, goes through the same lock, so this cannot
-    race it); if the journal survives (another process holds the lock
-    right now), the read fails LOUDLY rather than returning silently
-    incomplete results. Manifest-carrying indexes never take this path:
-    their pre-flip manifest is already consistent."""
-    from wiser_spark.streaming.incremental import (
-        read_generations,
-        recover_compaction,
-    )
+    A compaction journal with no manifest beside it has no consistent
+    state to read (every writer that journals publishes a manifest
+    first), so the read refuses instead of listing a torn directory."""
+    from wiser_spark.streaming.incremental import read_generations
 
     base = f"{index_dir}/segments"
     gens = read_generations(index_dir)
     if gens is None and os.path.exists(f"{index_dir}/compaction.json"):
-        recover_compaction(index_dir)
-        gens = read_generations(index_dir)  # the apply may publish one
-        if gens is None and os.path.exists(f"{index_dir}/compaction.json"):
-            raise RuntimeError(
-                f"index at {index_dir!r} has a pending compaction journal "
-                "and no generations manifest (legacy torn swap), and "
-                "another process holds compaction.lock — retry once its "
-                "recovery completes (reading now would silently miss the "
-                "merged-away generations)"
-            )
+        raise ValueError(
+            f"index at {index_dir!r} has a compaction journal but no "
+            "generations manifest; no supported writer leaves that state"
+        )
     if gens is None:
         return spark.read.schema(SEGMENT_SCHEMA).parquet(base)
     if not gens:
@@ -1467,6 +1432,7 @@ class SegmentIndex:
         self.scan_coalesce = scan_coalesce
         with open(f"{index_dir}/stats.json") as f:
             self.meta = json.load(f)
+        check_layout(self.meta, index_dir)
         self.params = BM25Params(k1=self.meta["k1"], b=self.meta["b"])
         self.stats = CorpusStats(self.meta["n_docs"], self.meta["avgdl"])
         # explicit schemas keep a degenerate (empty-corpus) index
@@ -1488,25 +1454,18 @@ class SegmentIndex:
         # dictionary is the hot lookup table of every query (the
         # reference mmaps my.tip once) — cache it. bytes/prefetch_pages
         # are the reference's .tip prefetch-zone field analogue
-        # (flash_engine_dumper.h:44-49); dictionaries written before the
-        # field read as null (-> full decode, the conservative choice)
+        # (flash_engine_dumper.h:44-49); a dictionary without the field
+        # (IndexBuildPipeline's (term, df) stage) reads null (-> full
+        # decode, the conservative choice)
         self.dictionary = spark.read.schema(
             "term string, df int, bytes_docid_tf long, prefetch_pages int"
         ).parquet(f"{index_dir}/dictionary").cache()
-        # v2 (map-side) indexes carry doc lengths as in-shard sentinel
-        # rows; v1 keeps a separate docstats table (query-time cogroup)
-        self.has_sentinel = bool(self.meta.get("doclen_sentinel"))
-        # sized-bloom geometry (bits/bytes/hashes), absent on legacy
-        # 64-bit-bloom indexes
+        # sized-bloom geometry (bits/bytes/hashes); None when the index
+        # was built without blooms
         from wiser_spark.functions.bloom import BloomParams
 
         b = self.meta.get("bloom")
         self.bloom_cfg = BloomParams(**b) if b else None
-        self.docstats = (
-            None
-            if self.has_sentinel
-            else spark.read.parquet(f"{index_dir}/docstats").cache()
-        )
         self._dict_mem: dict[str, tuple[int, int | None]] | None = None
         self._dict_mem_tried = False
         # over-cap vocabularies: per-process memo of looked-up terms
@@ -1514,52 +1473,6 @@ class SegmentIndex:
         # process's working set cost zero Spark jobs (r06, VERDICT
         # item 7). Bounded by the distinct terms this process queries.
         self._dict_memo: dict[str, tuple[int, int | None] | None] = {}
-        self._doclens: DataFrame | None = None
-        self._doclens_lock = threading.Lock()
-        # v1 engine-load prefetch (r06 second pass): the shard-keyed
-        # doc-length cache is load-time state, like the dictionary the
-        # reference mmaps at engine start (vacuum_engine.h:119-142) —
-        # fill it from a background thread at construction so the cost
-        # overlaps index load instead of landing inside the FIRST
-        # query's latency (measured: the first v1 segment query paid
-        # ~0.6-0.7 s of the fill at 50k docs while the others ran
-        # ~0.5 s). Failures are swallowed: a racing teardown (tmp index
-        # deleted, session stopped) just means the first query builds
-        # the cache itself, as before.
-        self._doclens_prefetch_thread: threading.Thread | None = None
-        if not self.has_sentinel and self.docstats is not None:
-            t = threading.Thread(
-                target=self._prefetch_doclens, daemon=True,
-                name="wiser-doclens-prefetch",
-            )
-            self._doclens_prefetch_thread = t
-            t.start()
-
-    def _prefetch_doclens(self) -> None:
-        try:
-            self._doclens_by_shard().count()
-        except Exception:
-            pass
-
-    def _doclens_by_shard(self) -> DataFrame:
-        """v1 (separate-docstats) indexes: the per-shard doc-length side
-        of the query cogroup, shard-keyed and CACHED in the same
-        hash(shard_id) layout as the segments cache — so the per-query
-        cogroup needs no Exchange on either side (r05 re-shuffled the
-        whole docstats table on every query). Thread-safe: the
-        load-time prefetch thread and a first query may race here."""
-        with self._doclens_lock:
-            if self._doclens is None:
-                n_shards = self.meta["n_shards"]
-                self._doclens = (
-                    self.docstats.withColumn(
-                        "shard_id", (F.col("doc_id") % n_shards).cast("int")
-                    )
-                    .select("shard_id", "doc_id", "doclen_char")
-                    .repartition(self._scan_parts, "shard_id")
-                    .cache()
-                )
-            return self._doclens
 
     # the reference mmaps the WHOLE .tip into the serving process once
     # (vacuum_engine.h:119-142). The analogue: when the vocabulary is
@@ -1572,13 +1485,6 @@ class SegmentIndex:
     # cap (10^12-file vocabularies) lookups stay distributed filters on
     # the cached dictionary DataFrame.
     DICT_DRIVER_CACHE_MAX = 200_000
-
-    def _vocab_size(self) -> int:
-        """Vocabulary size, from stats.json when the writer recorded it
-        (every round-4+ writer does) — sizing the driver cache then
-        costs zero Spark jobs; older indexes pay one count()."""
-        n = self.meta.get("n_terms")
-        return int(n) if n is not None else self.dictionary.count()
 
     def warmup(self) -> "SegmentIndex":
         """Build the driver dictionary cache (and materialize the
@@ -1604,7 +1510,9 @@ class SegmentIndex:
         """term -> (df, prefetch_pages) for the terms present."""
         if not self._dict_mem_tried:
             self._dict_mem_tried = True
-            if self._vocab_size() <= self.DICT_DRIVER_CACHE_MAX:
+            # every writer records the vocabulary size, so sizing the
+            # driver cache costs zero Spark jobs
+            if int(self.meta["n_terms"]) <= self.DICT_DRIVER_CACHE_MAX:
                 self._dict_mem = {
                     r["term"]: (int(r["df"]), r["prefetch_pages"])
                     for r in self.dictionary.collect()
@@ -1694,9 +1602,9 @@ class SegmentIndex:
         }
         cache = tfnorm_cache(avgdl, self.params)
         k1 = self.params.k1
-        bloom_cfg = self.bloom_cfg  # plain locals: the UDF closure must
-        has_sentinel = self.has_sentinel  # not capture self (it drags
+        # plain local: the UDF closure must not capture self (it drags
         # the SparkSession into pickle)
+        bloom_cfg = self.bloom_cfg
         # positions are decoded ONLY for terms that appear in a phrase
         # query; offsets ONLY for snippet queries' terms — one long
         # phrase in a big log must not make every hot term's positional
@@ -1735,25 +1643,21 @@ class SegmentIndex:
             seg_cols += ["pos_blob", "skip_pos_offs"]
         if need_off:
             seg_cols += ["off_blob", "skip_off_offs"]
-        wanted = set(all_terms) | ({""} if has_sentinel else set())
-        if has_sentinel:
-            # phrase bloom rows (pruning-only): end blooms for all but
-            # the last term, begin blooms for all but the first (the
-            # sided 2-term choice needs either available)
-            for _, terms_l, ph in qlist:
-                if ph:
-                    wanted.update(BLOOM_PREFIX + t for t in terms_l[:-1])
-                    wanted.update(BLOOM_BEGIN_PREFIX + t for t in terms_l[1:])
+        wanted = set(all_terms) | {DOCLEN_TERM}
+        # phrase bloom rows (pruning-only): end blooms for all but the
+        # last term, begin blooms for all but the first (the sided
+        # 2-term choice needs either available)
+        for _, terms_l, ph in qlist:
+            if ph:
+                wanted.update(BLOOM_PREFIX + t for t in terms_l[:-1])
+                wanted.update(BLOOM_BEGIN_PREFIX + t for t in terms_l[1:])
         seg = self.segments.filter(
             F.col("term").isin(sorted(wanted))
         ).select(*seg_cols)
-        doclens = None if has_sentinel else self._doclens_by_shard()
 
-        def shard_kernel(
-            seg_pdf: pd.DataFrame, len_pdf: pd.DataFrame | None
-        ) -> pd.DataFrame:
+        def shard_kernel(seg_pdf: pd.DataFrame) -> pd.DataFrame:
             rows_by_term, bloom_rows, sentinel_rows = _parse_shard_rows(seg_pdf)
-            codes_for = _doclen_code_fn(sentinel_rows, len_pdf)
+            codes_for = _doclen_code_fn(sentinel_rows)
             # LAZY decode, shared across queries: a term decodes at most
             # once fully (at the richest level any query needs); terms
             # in partial_set instead decode only the bags that can hold
@@ -1940,15 +1844,7 @@ class SegmentIndex:
         shard_schema = "query_id int, doc_id long, score double"
         if need_off:
             shard_schema += ", offs array<array<long>>"
-        if has_sentinel:
-            return seg.groupBy("shard_id").applyInPandas(
-                lambda sp: shard_kernel(sp, None), shard_schema
-            )
-        return seg.groupBy("shard_id").cogroup(
-            doclens.groupBy("shard_id")
-        ).applyInPandas(
-            lambda sp, lp: shard_kernel(sp, lp), shard_schema
-        )
+        return seg.groupBy("shard_id").applyInPandas(shard_kernel, shard_schema)
 
     def search(
         self,
@@ -2081,7 +1977,12 @@ class SegmentIndex:
         kernel, phrase queries position-filtered), with content from
         ``docs`` (lake table, broadcast join over <= k*|log| winner
         rows) or ``doc_store_dir`` (chunked-store point fetch of the
-        distinct winner ids — the serving flow)."""
+        distinct winner ids — the serving flow).
+
+        Raises ValueError on a log that repeats a query_id."""
+        from wiser_spark.operators.topk import check_unique_query_ids
+
+        check_unique_query_ids(queries)
         out_schema = "query_id int, rank int, doc_id long, score double"
         if return_snippets:
             if docs is None and doc_store_dir is None:

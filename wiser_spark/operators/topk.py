@@ -197,6 +197,17 @@ def _phrase_gate():
     return F.size(inter) > 0
 
 
+def check_unique_query_ids(queries) -> None:
+    """A query log names each query once. A repeated query_id is
+    malformed input: its rows would be indistinguishable in the
+    (query_id, rank) output, so refuse it instead of answering twice."""
+    seen: set[int] = set()
+    for qid, _, _ in queries:
+        if int(qid) in seen:
+            raise ValueError(f"query log repeats query_id {int(qid)}")
+        seen.add(int(qid))
+
+
 def bm25_topk_batch(
     postings: DataFrame,
     docstats: DataFrame,
@@ -216,7 +227,9 @@ def bm25_topk_batch(
     former per-shape N-way self-join chains and their union are gone:
     guide §2.3/§2.4). The per-query top-k is a two-phase salted window
     (skew-safe). Scores fold in term order — bit-identical to
-    ``bm25_topk``."""
+    ``bm25_topk``. Raises ValueError on a log that repeats a
+    query_id."""
+    check_unique_query_ids(queries)
     params = params or BM25Params()
     spark = postings.sparkSession
     from pyspark.sql import Window

@@ -8,13 +8,19 @@ the distributed analogue of the reference's two-pass build,
   postings   tokenize + explode + groupBy(term, doc_id)
   docstats   doc lengths (+ lossy byte) + sha256 invariant
   dictionary term -> global df
-  segments   shard + encode posting blobs (the "merge" shuffle: the
-             reference's single-node qq->vacuum conversion becomes a
-             repartition by (shard, term) + partition-local encode)
+  segments   shard + encode posting blobs, led by each shard's
+             doc-length sentinel row from docstats (the "merge"
+             shuffle: the reference's single-node qq->vacuum conversion
+             becomes a repartition by shard + partition-local encode)
 
 Re-running skips every stage whose input fingerprint is unchanged, so a
 killed build resumes where it stopped. Fingerprints chain: stage N's
 input fingerprint includes stage N-1's output fingerprint.
+
+work_dir is the queryable index: the dictionary and segments stages
+write its tables in place, beside stats.json and manifest.json; the
+docs, postings and docstats checkpoints, which no reader opens, live
+under work_dir/_stages/.
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ from wiser_spark.operators.postings import (
     build_dictionary,
     build_postings,
 )
-from wiser_spark.operators.segments import build_segments
+from wiser_spark.operators.segments import build_segments, write_meta
 from wiser_spark.plans.manifest import (
     Manifest,
     StageEntry,
@@ -61,6 +67,19 @@ def _source_lineage_fp(source: DataFrame) -> str:
     return fingerprint(*entries)
 
 
+# stages whose output is an index table (read by SegmentIndex); every
+# other stage is a build checkpoint kept under STAGES_DIR
+SERVED_STAGES = frozenset({"dictionary", "segments"})
+STAGES_DIR = "_stages"
+
+
+def stage_dir(work_dir: str, stage: str) -> str:
+    """Where ``stage`` of a pipeline over ``work_dir`` writes."""
+    if stage in SERVED_STAGES:
+        return os.path.join(work_dir, stage)
+    return os.path.join(work_dir, STAGES_DIR, stage)
+
+
 class IndexBuildPipeline:
     def __init__(
         self,
@@ -82,14 +101,11 @@ class IndexBuildPipeline:
         self.manifest = Manifest(work_dir)
 
     # ------------------------------------------------------------ stages
-    def _out(self, stage: str) -> str:
-        return os.path.join(self.work_dir, stage)
-
     def _run_stage(self, stage: str, input_fp: str, write_fn) -> str:
         """Run or skip one stage; returns its output fingerprint."""
-        if self.manifest.can_skip(stage, input_fp):
+        out_dir = stage_dir(self.work_dir, stage)
+        if self.manifest.can_skip(stage, input_fp) and os.path.isdir(out_dir):
             return self.manifest.fingerprint_of(stage)
-        out_dir = self._out(stage)
         with StageTimer() as t:
             write_fn(out_dir)
         rows = self.spark.read.parquet(out_dir).count()  # footer-only count
@@ -124,7 +140,7 @@ class IndexBuildPipeline:
                 pinned.unpersist()
 
         fp_docs = self._run_stage("docs", fp0, write_docs)
-        docs = self.spark.read.parquet(self._out("docs"))
+        docs = self.spark.read.parquet(stage_dir(self.work_dir, "docs"))
 
         fp_post = self._run_stage(
             "postings",
@@ -136,14 +152,14 @@ class IndexBuildPipeline:
                 content_col=self.content_col,
             ).write.mode("overwrite").parquet(d),
         )
-        postings = self.spark.read.parquet(self._out("postings"))
+        postings = self.spark.read.parquet(stage_dir(self.work_dir, "postings"))
 
         fp_stats = self._run_stage(
             "docstats", fingerprint("docstats", fp_docs, self.content_col),
             lambda d: build_docstats(docs, content_col=self.content_col)
             .write.mode("overwrite").parquet(d),
         )
-        docstats = self.spark.read.parquet(self._out("docstats"))
+        docstats = self.spark.read.parquet(stage_dir(self.work_dir, "docstats"))
 
         self._run_stage(
             "dictionary", fingerprint("dictionary", fp_post),
@@ -151,26 +167,24 @@ class IndexBuildPipeline:
         )
 
         def write_segments(d):
-            build_segments(postings, cfg.n_shards).write.mode(
+            build_segments(postings, cfg.n_shards, docstats).write.mode(
                 "overwrite"
             ).partitionBy("shard_id").parquet(d)
 
         self._run_stage(
             "segments",
-            fingerprint("segments", fp_post, cfg.n_shards),
+            fingerprint("segments", fp_post, fp_stats, cfg.n_shards),
             write_segments,
         )
 
         # final queryable-index metadata (consumed by SegmentIndex)
         stats = corpus_stats(docstats)
-        meta = {
+        write_meta(self.work_dir, {
             "n_docs": stats.n_docs, "avgdl": stats.avgdl,
+            "n_terms": self.manifest.entries["dictionary"].rows,
             "n_shards": cfg.n_shards, "k1": cfg.bm25.k1, "b": cfg.bm25.b,
-            "format": "wiser-spark-segment-v1",
-        }
-        with open(os.path.join(self.work_dir, "stats.json"), "w") as f:
-            json.dump(meta, f, indent=1)
-        _ = fp_stats
+            "format": "wiser-spark-segment-v2",
+        })
         return self.manifest
 
 
@@ -197,7 +211,7 @@ def build_index_mapside_batched(
     """Resumable BATCH build on the zero-shuffle map-side encoder — the
     north rule's "resumable from checkpoint with per-partition lineage
     + metrics" for the scale path (plans.IndexBuildPipeline covers the
-    v1 relational path).
+    shuffle-built relational path).
 
     The corpus splits into ``n_batches`` deterministic md5 slices; each
     slice goes through the streaming sink's exactly-once commit
@@ -271,7 +285,7 @@ def build_index_mapside_batched(
 
     indexer = IncrementalIndexer(
         index_dir, config=config, order_cols=order_cols,
-        content_col=content_col, fmt="v2",
+        content_col=content_col,
     )
     manifest = Manifest(index_dir)
     # stage the bucketed corpus ONCE, partitioned by slice, so each

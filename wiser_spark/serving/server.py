@@ -114,8 +114,8 @@ class SearchServer:
     ):
         """``indexer``: an ``IncrementalIndexer`` over the SAME index
         directory enables ``/add_document`` + ``/flush`` (construct it
-        with ``order_cols=("url", "title")`` and the index's fmt —
-        added docs carry exactly the reference Document fields).
+        with ``order_cols=("url", "title")`` — added docs carry exactly
+        the reference Document fields).
         ``flush_every`` > 0 auto-commits whenever that many docs are
         buffered."""
         self.index = index
@@ -409,8 +409,6 @@ class SearchServer:
         self.index = new.warmup()
         old.segments.unpersist(blocking=False)
         old.dictionary.unpersist(blocking=False)
-        if old.docstats is not None:
-            old.docstats.unpersist(blocking=False)
         return f"{n} docs committed"
 
     # -- lifecycle -------------------------------------------------------

@@ -25,9 +25,13 @@ sink is made idempotent:
     transient read error restarted docIDs at 0 cannot occur: nothing
     here swallows exceptions).
 
-Query-time global stats (N, avgdl, df) shift as documents arrive; the
-engine recomputes them from the accumulated docstats/dictionary tables at
-query time, so results always reflect the ingested prefix exactly.
+Query-time global stats (N, avgdl, df) shift as documents arrive: every
+commit refolds N and avgdl from the commit log (each entry records its
+batch's doc count and summed doc length) and df from the accumulated
+dictionary deltas, so results always reflect the ingested prefix
+exactly. Each generation is built by the zero-shuffle map-side encoder,
+so per-doc lengths ride in its sentinel rows and both bloom sides in
+its segment rows.
 
 READ ISOLATION (round-5 redesign, closes the r04 advisory findings): the
 live generation set is published through ``generations.json``, updated
@@ -54,11 +58,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from wiser_spark.config import IndexConfig
-from wiser_spark.operators.docstats import build_docstats
-from wiser_spark.operators.postings import build_postings
-from wiser_spark.operators.segments import build_segments, prefetch_pages_col
+from wiser_spark.operators.segments import (
+    check_layout,
+    prefetch_pages_col,
+    write_meta,
+)
 
-_TABLES = ("segments", "docstats", "dictionary_deltas")
+_TABLES = ("segments", "dictionary_deltas")
 
 # merged generations install OUTSIDE the micro-batch id space: ids are
 # max(MERGED_GEN_BASE, max(existing)+1), so an install NEVER collides
@@ -79,8 +85,8 @@ def _manifest_path(index_dir: str) -> str:
 
 def read_generations(index_dir: str) -> list[int] | None:
     """The LIVE generation set from the atomic manifest, or None when
-    the index predates manifests (readers then fall back to directory
-    listing — the pre-round-5 behavior)."""
+    the index has none (a non-generational index, or a stream that has
+    committed no documents yet)."""
     try:
         with open(_manifest_path(index_dir)) as f:
             return sorted(int(g) for g in json.load(f)["generations"])
@@ -118,21 +124,32 @@ def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
 
     IDEMPOTENT: a crash at any point is healed by running it again.
 
-    LEGACY journals (pre-round-5 writers) reuse a LIVE generation id as
-    the target (target ∈ remove-list), so "dst exists" there means the
-    OLD unmerged generation, not a prior install — those take the old
-    replace-in-place semantics (src present → replace dst; src absent →
-    a prior attempt already installed) instead of the skip, which on a
-    legacy journal would silently drop the staged merge and then delete
-    the merged-away generations."""
+    A journal whose target is one of the generations it removes was
+    written by a removed writer that reused a live id: "dst exists"
+    would then mean the old unmerged generation, the skip below would
+    drop the staged merge and the removal would lose the merged-away
+    documents — so such a journal is refused, untouched. So is a
+    journal with no generations manifest beside it: every writer that
+    journals publishes a manifest first, so there is no live set to
+    flip."""
     target = int(journal["target"])
-    legacy = target in {int(g) for g in journal["remove"]}
-    staging = journal["staging"]
-    if not os.path.isabs(staging):
-        # journals record table-relative staging paths so a recovering
-        # process with a different working directory still resolves
-        # them (r04 advisory); absolute paths (old journals) pass through
-        staging = os.path.join(index_dir, staging)
+    removed = {int(g) for g in journal["remove"]}
+    if target in removed:
+        raise ValueError(
+            f"compaction journal at {index_dir!r} targets generation "
+            f"{target}, which it also removes: no supported writer "
+            "journals that; inspect _staging/ and the journal by hand"
+        )
+    gens = read_generations(index_dir)
+    if gens is None:
+        raise ValueError(
+            f"compaction journal at {index_dir!r} has no generations "
+            "manifest beside it: no supported writer leaves that state; "
+            "inspect _staging/ and the journal by hand"
+        )
+    # journals record index-relative staging paths so a recovering
+    # process with a different working directory still resolves them
+    staging = os.path.join(index_dir, journal["staging"])
     for table in journal["tables"]:
         src = f"{staging}/{table}"
         dst = f"{index_dir}/{table}/generation={target}"
@@ -147,23 +164,17 @@ def _apply_compaction_journal(index_dir: str, journal: dict) -> None:
                 "_staging/ and the journal before removing it by hand"
             )
         if os.path.isdir(dst):
-            if not legacy:
-                # fresh-id target: dst can only be a prior attempt's
-                # completed install (nothing else writes that id)
-                continue
-            shutil.rmtree(dst)  # legacy: dst is the old live generation
+            # fresh-id target: dst can only be a prior attempt's
+            # completed install (nothing else writes that id)
+            continue
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
-    gens = read_generations(index_dir)
-    if gens is not None:
-        removed = {int(g) for g in journal["remove"]}
-        _write_generations(index_dir, (set(gens) - removed) | {target})
+    _write_generations(index_dir, (set(gens) - removed) | {target})
     for table in journal["tables"]:
-        for g in journal["remove"]:
-            if int(g) != target:
-                shutil.rmtree(
-                    f"{index_dir}/{table}/generation={g}", ignore_errors=True
-                )
+        for g in removed:
+            shutil.rmtree(
+                f"{index_dir}/{table}/generation={g}", ignore_errors=True
+            )
     jpath = f"{index_dir}/compaction.json"
     try:
         os.remove(jpath)
@@ -243,17 +254,17 @@ class IncrementalIndexer:
         config: IndexConfig | None = None,
         order_cols=("repo", "path", "commit"),
         content_col: str = "content",
-        fmt: str = "v1",
+        fmt: str = "v2",
         with_blooms: bool = True,
         compact_every: int | None = None,
     ):
-        """``fmt="v1"``: shuffle-built generations + docstats table (the
-        original streaming layout). ``fmt="v2"``: each generation is
-        built with the ZERO-SHUFFLE map-side encoder — sentinel
-        doc-length rows and both bloom sides ride inside the segment
-        table, no docstats table exists, and ``compact_index`` merges
-        the generations (sentinels and blooms included) into the same
-        single-generation layout a batch map-side build writes.
+        """Each micro-batch becomes one generation built with the
+        ZERO-SHUFFLE map-side encoder: sentinel doc-length rows and both
+        bloom sides ride inside the segment table, and
+        ``compact_index`` merges the generations (sentinels and blooms
+        included) into the same single-generation layout a batch
+        map-side build writes. ``fmt`` names that layout; "v2" is the
+        only value.
 
         ``compact_every``: the TIERED AUTO-COMPACTION trigger — a
         long-running stream otherwise accumulates one generation per
@@ -262,37 +273,29 @@ class IncrementalIndexer:
         generations after a commit, they merge in place into one
         (``compact_segments`` — sentinels, both bloom sides, and the
         dictionary deltas included). None (default) disables it."""
-        if fmt not in ("v1", "v2"):
+        if fmt != "v2":
             raise ValueError(f"unknown streaming index format: {fmt}")
-        # resuming an existing index with the OTHER format would corrupt
-        # it silently (v1 generations carry no doc-length sentinels and
-        # contribute zero to the v2 avgdl fold) — refuse loudly
         try:
             with open(f"{index_dir}/stats.json") as f:
                 _meta = json.load(f)
-            existing = _meta.get("format", "")
         except (FileNotFoundError, json.JSONDecodeError):
-            _meta, existing = {}, ""
-        if existing and not existing.startswith(f"wiser-spark-segment-{fmt}"):
-            raise ValueError(
-                f"index at {index_dir!r} has format {existing!r}; "
-                f"cannot resume it with fmt={fmt!r}"
-            )
+            _meta = None
+        if _meta is not None:
+            # resuming an index of a removed layout would append
+            # generations its readers cannot combine — refuse loudly
+            check_layout(_meta, index_dir)
         self.index_dir = index_dir
         self.config = config or IndexConfig()
         self.order_cols = list(order_cols)
         self.content_col = content_col
-        self.fmt = fmt
         self.with_blooms = with_blooms
         self.compact_every = compact_every
         # appending to an EXISTING index must keep encoding blooms with
-        # the RECORDED sizing + hash family (stats.json), or the new
-        # generations' masks would not match the probe side; a meta
-        # that predates the family field reconstructs as the old "dh"
-        # family via the BloomParams default
+        # the RECORDED sizing (stats.json), or the new generations'
+        # masks would not match the probe side
         from wiser_spark.functions.bloom import BloomParams
 
-        b = _meta.get("bloom")
+        b = (_meta or {}).get("bloom")
         self.bloom_cfg = BloomParams(**b) if b else None
 
     # ------------------------------------------------------- commit log
@@ -309,14 +312,11 @@ class IncrementalIndexer:
             return {}
 
     def _append_commit(
-        self, commits: dict, batch_id: int, start: int, n: int,
-        lensum: int | None = None,
+        self, commits: dict, batch_id: int, start: int, n: int, lensum: int,
     ):
-        # v1 entries: [start, n]; v2 adds the batch's summed doc length
-        # (avgdl bookkeeping — v2 has no docstats table to average over)
-        commits[str(batch_id)] = (
-            [start, n] if lensum is None else [start, n, lensum]
-        )
+        # [start, n, lensum]: the batch's summed doc length is the avgdl
+        # bookkeeping (the per-doc lengths live in sentinel rows)
+        commits[str(batch_id)] = [start, n, lensum]
         tmp = self._commit_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(commits, f)
@@ -335,7 +335,7 @@ class IncrementalIndexer:
         row_number() over a 10^9-doc batch is the exact anti-pattern it
         exists to avoid. IDs here are 0-based; commit_prepared adds the
         commit log's offset (a free withColumn). The batch's row count
-        and (v2) summed doc length ride in assign_doc_ids' OWN stats
+        and summed doc length ride in assign_doc_ids' OWN stats
         job — no separate count() pass over the corpus slice."""
         from wiser_spark.functions.tokenize import doclen_col
         from wiser_spark.operators.postings import assign_doc_ids_with_stats
@@ -345,24 +345,15 @@ class IncrementalIndexer:
             # (triggers with no new files): commit them with ONE cheap
             # probe instead of paying the range-sort sampling + persist
             # + stats jobs just to discover n_docs == 0
-            return {
-                "docs0": None, "n_docs": 0,
-                "lensum": 0 if self.fmt == "v2" else None, "pinned": None,
-            }
-        aggs = []
-        if self.fmt == "v2":
-            # avgdl bookkeeping rides in the commit log (no docstats
-            # table in v2 — sentinels carry per-doc lengths)
-            aggs.append(
-                F.sum(
-                    doclen_col(F.col(self.content_col)).cast("long")
-                ).alias("lensum")
-            )
+            return {"docs0": None, "n_docs": 0, "lensum": 0, "pinned": None}
+        # avgdl bookkeeping rides in the commit log
         docs0, totals, pinned = assign_doc_ids_with_stats(
-            batch, self.order_cols, aggs
+            batch, self.order_cols,
+            [F.sum(doclen_col(F.col(self.content_col)).cast("long"))
+             .alias("lensum")],
         )
         n_docs = int(totals["_n"])
-        lensum = int(totals.get("lensum") or 0) if self.fmt == "v2" else None
+        lensum = int(totals.get("lensum") or 0)
         return {
             "docs0": docs0, "n_docs": n_docs, "lensum": lensum,
             "pinned": pinned,
@@ -381,7 +372,7 @@ class IncrementalIndexer:
         if n_docs == 0:
             if prep["pinned"] is not None:
                 prep["pinned"].unpersist()
-            self._append_commit(commits, batch_id, offset, 0)
+            self._append_commit(commits, batch_id, offset, 0, 0)
             return
         docs = prep["docs0"].withColumn(
             "doc_id", (F.col("doc_id") + F.lit(offset)).cast("long")
@@ -406,54 +397,36 @@ class IncrementalIndexer:
         self, spark, batch_id, docs, prep, staging, commits, offset,
         n_docs, lensum, refresh_meta,
     ) -> None:
-        if self.fmt == "v2":
-            from wiser_spark.operators.mapside import build_segments_mapside
-            from wiser_spark.operators.segments import (
-                SEGMENT_SCHEMA,
-                dictionary_from_segments,
-            )
+        from wiser_spark.operators.mapside import build_segments_mapside
+        from wiser_spark.operators.segments import (
+            SEGMENT_SCHEMA,
+            dictionary_from_segments,
+        )
 
-            segs = build_segments_mapside(
-                docs, self.config.n_shards, self.content_col,
-                with_blooms=self.with_blooms, bloom_cfg=self.bloom_cfg,
-            )
-            segs.write.mode("overwrite").partitionBy("shard_id").parquet(
-                f"{staging}/segments"
-            )
-            # the encode was the ONE action over the sorted slice: the
-            # pinned shuffle layout can release now (r04 advisory: the
-            # context cleaner is too lazy for a 10^12-file ingest)
-            prep["pinned"].unpersist()
-            # dictionary delta from the STAGED rows (plain term rows
-            # only) — no second tokenize pass over the batch
-            staged = spark.read.schema(SEGMENT_SCHEMA).parquet(
-                f"{staging}/segments"
-            )
-            dictionary_from_segments(staged).select(
-                "term", "df", "bytes_docid_tf"
-            ).write.mode("overwrite").parquet(f"{staging}/dictionary_deltas")
-            tables = ("segments", "dictionary_deltas")
-        else:
-            # v1 runs THREE jobs over the slice: pin it once, eagerly
-            docs = docs.localCheckpoint(eager=True)
-            prep["pinned"].unpersist()
-            postings = build_postings(docs, content_col=self.content_col)
-            docstats = build_docstats(docs, content_col=self.content_col)
-            build_segments(postings, self.config.n_shards).write.mode(
-                "overwrite"
-            ).partitionBy("shard_id").parquet(f"{staging}/segments")
-            docstats.select("doc_id", "doclen", "doclen_char").write.mode(
-                "overwrite"
-            ).parquet(f"{staging}/docstats")
-            postings.groupBy("term").agg(
-                F.count("*").cast("int").alias("df")
-            ).write.mode("overwrite").parquet(f"{staging}/dictionary_deltas")
-            tables = _TABLES
+        segs = build_segments_mapside(
+            docs, self.config.n_shards, self.content_col,
+            with_blooms=self.with_blooms, bloom_cfg=self.bloom_cfg,
+        )
+        segs.write.mode("overwrite").partitionBy("shard_id").parquet(
+            f"{staging}/segments"
+        )
+        # the encode was the ONE action over the sorted slice: the
+        # pinned shuffle layout can release now (r04 advisory: the
+        # context cleaner is too lazy for a 10^12-file ingest)
+        prep["pinned"].unpersist()
+        # dictionary delta from the STAGED rows (plain term rows only) —
+        # no second tokenize pass over the batch
+        staged = spark.read.schema(SEGMENT_SCHEMA).parquet(
+            f"{staging}/segments"
+        )
+        dictionary_from_segments(staged).select(
+            "term", "df", "bytes_docid_tf"
+        ).write.mode("overwrite").parquet(f"{staging}/dictionary_deltas")
 
         # atomic per-table publish: generation=<id> partition dirs. A
         # leftover from a crashed attempt of this SAME batch is replaced
         # (it was never committed; the retry produced identical data).
-        for table in tables:
+        for table in _TABLES:
             dst = f"{self.index_dir}/{table}/generation={batch_id}"
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             if os.path.exists(dst):
@@ -464,10 +437,9 @@ class IncrementalIndexer:
         # commit record (readers resolve generations from the manifest;
         # an uncommitted manifest entry is harmless — the dir exists and
         # the retry republishes identical data)
-        gens = read_generations(self.index_dir)
-        cur = set(gens) if gens is not None else set(self._generations())
-        cur.add(int(batch_id))
-        _write_generations(self.index_dir, cur)
+        _write_generations(
+            self.index_dir, {*self._generations(), int(batch_id)}
+        )
         self._append_commit(commits, batch_id, offset, n_docs, lensum)
         # refresh_meta=False defers the vocabulary-sized dictionary fold
         # (the batched build refreshes ONCE after its last batch instead
@@ -496,22 +468,10 @@ class IncrementalIndexer:
         )
 
     # ------------------------------------------------- auto-compaction
-    def _generations(self, table: str = "segments") -> list[int]:
-        """Live generation ids: the atomic manifest when present (the
-        segments table — the set readers resolve), else the directory
-        listing (docstats, or indexes predating manifests)."""
-        if table == "segments":
-            gens = read_generations(self.index_dir)
-            if gens is not None:
-                return gens
-        try:
-            return sorted(
-                int(p.split("=", 1)[1])
-                for p in os.listdir(f"{self.index_dir}/{table}")
-                if p.startswith("generation=")
-            )
-        except FileNotFoundError:
-            return []
+    def _generations(self) -> list[int]:
+        """Live generation ids: the atomic manifest (the set readers
+        resolve); none before the first non-empty commit."""
+        return read_generations(self.index_dir) or []
 
     def _gen_bytes(self, table: str, g: int) -> int:
         total = 0
@@ -526,9 +486,7 @@ class IncrementalIndexer:
 
     def _fold_deltas(self, spark: SparkSession, gens=None) -> DataFrame:
         """THE dictionary-deltas fold (one definition; _refresh_meta
-        folds every generation, compaction folds the merged subset).
-        v1 deltas lack bytes_docid_tf and read null -> null sums,
-        matching the meta fold's degrade."""
+        folds every generation, compaction folds the merged subset)."""
         d = spark.read.schema(
             "term string, df int, bytes_docid_tf long"
         ).parquet(f"{self.index_dir}/dictionary_deltas")
@@ -605,21 +563,13 @@ class IncrementalIndexer:
         sees the consistent pre-flip set or the consistent post-flip
         set, never a mix. Merging a SUBSET is query-identical:
         remaining generations still merge per (shard, term) at read
-        time, and the dictionary fold is sum-associative. Unmerged
-        tables (docstats) are untouched — a flat table gains nothing
-        from fewer generations."""
+        time, and the dictionary fold is sum-associative."""
         gens = sorted(int(g) for g in gens)
         if len(gens) < 2:
             return
         from wiser_spark.operators.segments import compact_segments
 
-        all_gens = self._generations()
-        # ensure the manifest exists BEFORE the swap so the flip in
-        # _apply_compaction_journal is the readers' commit point (an
-        # index from an older round adopts its directory listing)
-        if read_generations(self.index_dir) is None:
-            _write_generations(self.index_dir, all_gens)
-        target = max(MERGED_GEN_BASE, max(all_gens) + 1)
+        target = max(MERGED_GEN_BASE, max(self._generations()) + 1)
         staging_rel = "_staging/compact"
         staging = f"{self.index_dir}/{staging_rel}"
         shutil.rmtree(staging, ignore_errors=True)
@@ -643,7 +593,7 @@ class IncrementalIndexer:
             "remove": gens,
             "target": target,
             "staging": staging_rel,
-            "tables": ["segments", "dictionary_deltas"],
+            "tables": list(_TABLES),
         }
         jpath = f"{self.index_dir}/compaction.json"
         tmp = jpath + ".tmp"
@@ -652,8 +602,7 @@ class IncrementalIndexer:
         os.replace(tmp, jpath)  # the commit point of the swap
         # apply through recover_compaction so the LIVE apply holds
         # compaction.lock too — every journal application is then
-        # lock-serialized (legacy pre-manifest indexes let READERS
-        # recover via the same path, which would otherwise race this)
+        # lock-serialized
         recover_compaction(self.index_dir)
 
     def _next_doc_id(self, commits: dict) -> int:
@@ -661,21 +610,13 @@ class IncrementalIndexer:
         return max((v[0] + v[1] for v in commits.values()), default=0)
 
     def _refresh_meta(self, spark: SparkSession) -> None:
-        if self.fmt == "v2":
-            # N and avgdl from the commit log's [start, n, lensum] rows
-            commits = self._read_commits()
-            n_docs = sum(v[1] for v in commits.values())
-            lensum = sum((v[2] if len(v) > 2 else 0) for v in commits.values())
-            avgdl = (lensum / n_docs) if n_docs else 1.0
-        else:
-            stats = spark.read.parquet(f"{self.index_dir}/docstats").agg(
-                F.count("*").alias("n"),
-                F.avg(F.col("doclen").cast("double")).alias("avgdl"),
-            ).collect()[0]
-            n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
+        # N and avgdl from the commit log's [start, n, lensum] rows
+        commits = self._read_commits()
+        n_docs = sum(v[1] for v in commits.values())
+        # (empty batches once committed as [start, 0])
+        lensum = sum(v[2] for v in commits.values() if len(v) > 2)
         # fold delta dictionaries into the queryable table (ONE fold
-        # definition, shared with compaction's subset fold); v1 deltas
-        # lack bytes_docid_tf (reads null -> null pages -> full decode)
+        # definition, shared with compaction's subset fold)
         (
             self._fold_deltas(spark)
             .withColumn("prefetch_pages", prefetch_pages_col())
@@ -684,28 +625,23 @@ class IncrementalIndexer:
         )
         meta = {
             "n_docs": n_docs,
-            "avgdl": avgdl,
+            "avgdl": (lensum / n_docs) if n_docs else 1.0,
             "n_terms": spark.read.parquet(
                 f"{self.index_dir}/dictionary"
             ).count(),
             "n_shards": self.config.n_shards,
             "k1": self.config.bm25.k1,
             "b": self.config.bm25.b,
-            "format": f"wiser-spark-segment-{self.fmt}"
-            + ("-mapside" if self.fmt == "v2" else ""),
+            "format": "wiser-spark-segment-v2-mapside",
             "streaming": True,
         }
-        if self.fmt == "v2":
-            meta["doclen_sentinel"] = True
-            if self.with_blooms:
-                from wiser_spark.functions.bloom import bloom_params
+        if self.with_blooms:
+            from wiser_spark.functions.bloom import bloom_params
 
-                # preserve the index's recorded bloom params (sizing +
-                # hash family) across refreshes; defaults only for a
-                # brand-new index
-                meta["bloom"] = (self.bloom_cfg or bloom_params())._asdict()
-        with open(f"{self.index_dir}/stats.json", "w") as f:
-            json.dump(meta, f, indent=1)
+            # preserve the index's recorded bloom params across
+            # refreshes; defaults only for a brand-new index
+            meta["bloom"] = (self.bloom_cfg or bloom_params())._asdict()
+        write_meta(self.index_dir, meta)
 
 
 def start_incremental_index(
@@ -717,16 +653,14 @@ def start_incremental_index(
     config: IndexConfig | None = None,
     order_cols=("repo", "path", "commit"),
     content_col: str = "content",
-    fmt: str = "v1",
     compact_every: int | None = None,
 ):
     """File-source streaming build: new parquet files under ``input_dir``
     are ingested exactly-once (Structured Streaming checkpointing + the
     idempotent commit-log sink) into the index at ``index_dir``. Returns
-    the StreamingQuery. ``fmt="v2"`` writes zero-shuffle map-side
-    generations (sentinels + blooms in the segment table)."""
+    the StreamingQuery."""
     indexer = IncrementalIndexer(index_dir, config, order_cols, content_col,
-                                 fmt=fmt, compact_every=compact_every)
+                                 compact_every=compact_every)
     stream = spark.readStream.schema(schema).parquet(input_dir)
     return (
         stream.writeStream.foreachBatch(indexer.process_batch)
